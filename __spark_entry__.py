@@ -26,9 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, in explicit
-    priority order (the driver's correctness sweep checks a bounded
-    prefix of this dict — see registry.PRIORITY)."""
+    """One entry per implemented operator from SURVEY.md §2, oldest
+    driver-green evidence first (the driver's correctness sweep checks
+    a bounded prefix of this dict — see registry.ordered_queries)."""
     return registry.ordered_queries()
 
 

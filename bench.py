@@ -21,18 +21,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# First N_CANON entries = the FROZEN canonical subset (the r2-era
-# queries, unchanged since round 2): they run FIRST in the session,
-# right after warm-up, so their subtotal (`value_canon` in the output)
-# is comparable round-over-round regardless of how many queries the
-# full suite grows by — the round-5 lesson was that 205 queries in one
-# JVM session inflate per-query times ~1.5-1.8x via codegen-cache/GC
-# pressure, drowning the "did this round get faster?" signal. DO NOT
-# reorder or insert above the N_CANON boundary; append new queries at
-# the tail only.
-N_CANON = 47  # boundary: ...corpus_pack_sequences | q6_forecast_revenue...
-
-HEADLINE = (
+# The FROZEN canonical subset (the r2-era queries, unchanged since
+# round 2): they run FIRST in the session, right after warm-up, so
+# their subtotal (`value_canon` in the output) is comparable
+# round-over-round regardless of how many queries the full suite grows
+# by — the round-5 lesson was that 205 queries in one JVM session
+# inflate per-query times ~1.5-1.8x via codegen-cache/GC pressure,
+# drowning the "did this round get faster?" signal. DO NOT reorder or
+# edit; every other registered query runs after these, in the
+# registry's correctness-sweep order.
+CANON = (
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
@@ -80,468 +78,12 @@ HEADLINE = (
     "dedup_cluster_cc",
     "text_repetition_ratio",
     "corpus_pack_sequences",
-    # round-4 TPC-H coverage completion
-    "q6_forecast_revenue",
-    "q2_min_price_supplier",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q20_part_promotion_suppliers",
-    "q21_sole_blame_supplier",
-    "window_functions_suite",
-    "corpus_decontaminate",
-    "corpus_semantic_dedup_keep_first",
-    "text_unigram_logloss",
-    "bm25_search",
-    "lang_temperature_sample",
-    "text_winnow_fingerprints",
-    "knn_graph_lsh",
-    "dedup_winnow_pairs",
-    "embedding_dim_stats",
-    "dedup_ngram_coverage",
-    "zipf_token_stats",
-    "doc_chunk_sliding",
-    "token_vocab_coverage",
-    "bigram_pmi",
-    "pagerank_knn",
-    "basket_brand_lift",
-    "table_profile",
-    "event_interarrival_stats",
-    "lang_length_quartiles",
-    "daily_revenue_anomaly",
-    "langid_confusion",
-    "customer_rfm_segments",
-    "dedup_lsh_recall_report",
-    "source_quality_report",
-    "corpus_final_verdict",
-    "abundance_rarefaction",
-    "corpus_length_token_corr",
-    "events_hourly_heatmap",
-    "supplier_return_rate",
-    # round-5 additions
-    "attribution_last_touch",
-    "orders_open_backlog_daily",
-    "robust_anomaly_mad",
-    "text_bigram_logloss",
-    "dedup_levenshtein",
-    "minhash_jaccard_estimate",
-    "corpus_mixture_plan",
-    "ann_recall_report",
-    "dedup_family_histogram",
-    "taxa_cooccurrence",
-    "rarefaction_curve",
-    "dedup_cross_source_matrix",
-    "funnel_time_to_convert",
-    "revenue_seasonality_weekday",
-    "order_fulfillment_latency",
-    "supplier_lead_time_trend",
-    "repeat_purchase_intervals",
-    # round-5 continuation
-    "customer_pareto_share",
-    "cohort_ltv_matrix",
-    "part_brand_hhi",
-    "event_type_transitions",
-    "session_bounce_rate",
-    "user_stickiness_monthly",
-    "source_novelty_ngrams",
-    "embedding_norm_profile",
-    "kmeans_embeddings",
-    "nation_trade_flow",
-    "part_size_price_corr",
-    "event_value_daily_median",
-    "otu_prevalence_spectrum",
-    "source_length_gini",
-    "text_token_entropy",
-    "customer_value_band_migration",
-    # round-5 continuation, batch 2
-    "beta_diversity_jaccard",
-    "sample_neighbors_topk",
-    "heavy_hitters_cms",
-    "attribution_time_decay",
-    "corpus_perplexity_filter",
-    "bloom_semijoin_filter",
-    "dedup_containment",
-    "event_user_paths_topk",
-    "revenue_ewma_daily",
-    "text_tfidf_cosine_pairs",
-    "embedding_pq_codebook",
-    "ann_pq_adc_topk",
-    "otu_indicator_species",
-    "multimodal_phash_dedup",
-    "orders_yoy_growth",
-    "events_rolling_wau",
-    "multimodal_wav_rms",
-    "embedding_outlier_topk",
-    "discount_effectiveness",
-    "core_microbiome",
-    "token_rate_drift",
-    "hierarchy_share_of_parent",
-    "multimodal_phash_near_pairs",
-    "otu_niche_breadth",
-    "chao1_richness",
-    "pielou_evenness",
-    "rank_abundance_curve",
-    "dsir_importance_select",
-    "tokenizer_fertility",
-    "zorder_file_pruning",
-    "anosim_groups",
-    "order_price_reconciliation",
-    "join_skew_audit",
-    "curriculum_schedule",
-    "kfold_assignment",
-    "partition_balance_audit",
-    "knn_triangle_count",
-    "species_accumulation_curve",
-    "rapid_fire_users",
-    "benford_first_digit",
-    "theil_inequality",
-    "trimmed_mean_by_segment",
-    "daily_autocorrelation",
-    "heaps_law_estimate",
-    "entropy_dedup_calibration",
-    "intrinsic_dimension_twonn",
-    "mantel_test_gradient",
-    "markov_entropy_rate",
-    "part_supply_resilience",
-    "source_jsd_matrix",
-    "churn_reactivation_quarterly",
-    "returnflag_drift_yearly",
-    "kaplan_meier_order_gaps",
-    "laspeyres_price_index",
-    "cscore_checkerboard",
-    "weekly_decomposition",
-    "log_log_elasticity",
-    "markov_absorption_3step",
-    "otu_nestedness_nodf",
-    "event_burstiness_fano",
-    "pareto_tail_alpha",
-    "ks_binned_two_sample",
-    "cramers_v_association",
-    "gumbel_moments_fit",
-    "new_repeat_revenue_monthly",
-    "month_end_lift",
-    "taxa_temporal_drift",
-    "hill_numbers_suite",
-    "faith_pd_taxonomy",
-    "bloom_sizing_advisor",
-    "two_way_effects",
-    "beta_dispersion_groups",
-    "ab_test_sizing",
-    "order_size_dispersion",
-    "error_budget_burn",
-    "unifrac_unweighted",
-    "unifrac_weighted",
-    "boilerplate_ngram_hotlist",
-    "price_lognormal_fit",
-    "map_tiles_pyramid",
-    "ann_ivfadc_topk",
-    "heldout_oov_rate",
-    "lsh_bucket_profile",
-    "dedup_band_threshold_sweep",
-    "ivfadc_recall_report",
-    # round-6 additions
-    "ann_ivfadc_nprobe_topk",
-    "embedding_opq_balance",
-    "ann_ivfadc_rerank_topk",
-    "embedding_prefix_recall",
-    "beta_diversity_morisita_horn",
-    "corpus_regex_scrub_report",
-    "event_debounce_dedup",
-    "ivf_cell_balance_report",
-    "embedding_cell_residual_stats",
-    "dedup_family_agreement",
-    "multimodal_features",
-    "approx_distinct_kmv",
-    # round-6 session-3 additions (append-only tail)
-    "gopher_quality_rules",
-    "ccnet_perplexity_tertiles",
-    "doc_ngram_rep_profile",
-    "window_funnel_strict",
-    "scd2_user_state_intervals",
-    "revenue_cusum_changepoint",
-    "permanova_pseudo_f",
-    "embedding_cosine_pair_histogram",
-    "otu_region_overlap",
-    "dim_broadcast_advisor",
-    "knn_degree_assortativity",
-    "weighted_sample_es",
-    "part_price_size_skyline",
-    "segment_nation_mutual_info",
-    "centroid_assignment_accuracy",
-    "embedding_triplet_margin",
-    "daily_revenue_gapfill",
-    "rare_category_collapse",
-    "bloom_fpp_measured",
-    "corpus_regex_scrub_apply",
-    "markov_next_event_accuracy",
-    "heldout_bigram_perplexity",
-    "ann_filtered_topk",
-    "ab_cuped_adjustment",
-    "lineitem_corr_matrix",
-    "revenue_v_shape_patterns",
-    "token_budget_apportion",
-    "contextual_filter_upset",
-    "embedding_dim_quantiles",
-    "scd2_containment_audit",
-    "markov_calibration_reliability",
-    "knn_reciprocity",
-    "scd2_dwell_time_stats",
-    # round-7 additions (append-only tail)
-    "beta_diversity_sorensen",
-    "gamma_diversity_partition",
-    "otu_endemism",
-    "berger_parker_dominance",
-    "ann_sdc_topk",
-    "pq_code_entropy",
-    "embedding_dim_covariance",
-    "minhash_union_cardinality",
-    "events_sliding_window_agg",
-    "knn_graph_components",
-    "ann_opq_adc_topk",
-    "knn_vote_accuracy",
-    "association_rules_parts",
-    "orders_abc_classification",
-    "skipgram_pmi_topk",
-    "parts_xyz_classification",
-    "mann_whitney_order_value",
-    "ann_index_size_report",
-    "logrank_reorder_test",
-    "pack_fill_report",
-    "spearman_part_size_price",
-    "theil_sen_revenue_trend",
-    "weibull_rank_regression",
-    "revenue_bridge_yoy",
-    "promo_did_estimate",
-    "label_centroid_distances",
-    "doc_hapax_ratio",
-    "kneser_ney_bigram_ppl",
-    "quantization_error_histogram",
-    "wilcoxon_signed_rank_yoy",
-    "dedup_survival_by_source",
-    "kruskal_wallis_h",
-    "anova_oneway_f",
-    "brown_forsythe_f",
-    "cochran_armitage_trend",
-    "kendall_tau_daily",
-    "whittaker_beta_nation",
-    "taylor_power_law",
-    "occupancy_abundance_deciles",
-    "metric_agreement_topk",
-    "vector_quantize_int4_error",
-    "knn_hubness_histogram",
-    "stopword_profile_cosine",
-    "term_burstiness",
-    "ttr_head100",
-    "competing_risks_cif",
-    "session_depth_histogram",
-    # round-8: complete registry coverage (VERDICT r7 item 3) — every
-    # registered key now has a bench entry; n_queries == registry size.
-    # Mostly cheap r2-era shapes, plus the one genuinely expensive
-    # late-comer: ordination_pcoa_2d (~30-round driver-loop power
-    # iteration on the bounded sample-selection Gower matrix; its cost
-    # is bounded by the SELECTION size, not SF — benched here so the
-    # artifact records that claim instead of asserting it).
-    "ace_richness",
-    "approx_distinct_parts",
-    "cohort_retention_matrix",
-    "contextual_filter_or",
-    "corpus_near_dedup_keep_first",
-    "cube_returns",
-    "cumulative_share_daily",
-    "dedup_embedding",
-    "distinct_parts_per_brand",
-    "events_session_window",
-    "events_windowed_agg",
-    "export_long_abundance",
-    "funnel_conversion",
-    "grouping_sets_mixed",
-    "histogram_binning",
-    "json_extraction",
-    "krona_rollup",
-    "map_binning_2d",
-    "median_exact_by_segment",
-    "multimodal_frame_sample",
-    "multimodal_meta",
-    "multimodal_resize",
-    "nelson_aalen_hazard",
-    "ordination_pcoa_2d",
-    "otu_query_combined",
-    "otu_text_search",
-    "pivot_wide",
-    "q14_promo_share",
-    "rollup_hierarchy",
-    "sample_stratified",
-    "sample_summary",
-    "taxonomy_isnot_filter",
-    "text_fingerprint",
-    "text_langid",
-    "text_token_count",
-    "tfidf_top_terms_approx",
-    # round-8 additions (append-only tail)
-    "dedup_splice_pairs",
-    "corpus_char_trigram_entropy",
-    "doc_script_mix",
-    "ann_range_query_count",
-    "embedding_pca_power_axis",
-    "friedman_test_weekday",
-    "grubbs_outlier_daily",
-    "page_hinkley_drift",
-    "jonckheere_terpstra_trend",
-    "life_table_actuarial",
-    "event_type_entropy",
-    "beta_diversity_kulczynski",
-    "chao2_incidence",
-    "otu_rank_shift",
-    "daily_acf_lags",
-    "orders_runs_test",
-    "seasonality_strength",
-    "split_unigram_kl",
-    "doc_fourgram_compressibility",
-    "bpe_merge_candidates",
-    "beta_diversity_ochiai",
-    "sample_coverage_goods",
-    "ann_lsh_multiprobe_topk",
-    "quantiles_exact_by_segment",
-    "seasonal_naive_mase",
-    "knn_shared_neighbor_histogram",
-    "label_silhouette_centroid",
-    "parts_slow_mover_detection",
-    "orders_hhi_by_nation",
-    "text_sentence_profile",
-    "embedding_norm_vs_label_anova",
-    "events_trending_topk",
-    # round-9 additions (append-only tail)
-    "text_word_length_hist",
-    "doc_commonness_profile",
-    "split_contamination_ngrams",
-    "boilerplate_prefix_census",
-    "corpus_shingle_size_sweep",
-    "mann_kendall_trend",
-    "bartlett_test_variances",
-    "chi2_gof_weekday",
-    "sign_test_paired_months",
-    "quality_rater_kappa",
-    "event_type_stationary_dist",
-    "events_inactivity_gaps_topk",
-    "events_peak_detection_daily",
-    "customer_order_gini",
-    "order_linecount_priority_profile",
-    "part_type_price_quartiles",
-    "revenue_lorenz_points",
-    "supplier_catalog_breadth",
-    "ann_top1_margin_histogram",
-    "knn_two_hop_reach",
-    "embedding_split_centroid_shift",
-    "shuffle_partition_advisor",
-    "cms_width_error_sweep",
-    "restricted_mean_survival",
-    "beta_baselga_partition",
-    "rarity_weighted_richness",
-    "user_lifecycle_weekly",
-    "nation_month_revenue_zscore",
-    "supplier_share_volatility",
-    "reorder_regularity_census",
-    "dedup_savings_by_source",
-    "events_record_days",
-    "data_expectations_audit",
-    "orders_monthly_percentile_bridge",
-    "ann_recall_at_k_sweep",
-    "hazard_ratio_segments",
-    "taxonomy_level_diversity",
-    "event_value_percentiles_by_type",
-    "doc_length_quality_grid",
-    "brand_nation_penetration",
-    "ann_greedy_graph_search",
-    "ann_beam_graph_search",
-    "user_hour_entropy_census",
-    "customer_brand_loyalty_hhi",
-    "priority_mix_jsd_monthly",
-    # round-10 additions (append-only tail)
-    "knn_graph_connected",
-    "expectations_audit_delta",
-    "events_burst_alarm_windows",
-    "ann_hnsw_layered_search",
-    "embedding_jl_distortion",
-    "orders_durbin_watson",
-    "text_tile_dedup_census",
-    "winsorized_mean_by_segment",
-    "order_value_poisson_bootstrap",
-    "ann_jl_topk_recall",
-    "scd2_point_in_time_join",
-    # round-11 additions (append-only tail)
-    "ann_hnsw_multilayer_search",
-    "ann_jl_pool_recall_sweep",
-    "anosim_permutation_p",
-    "permanova_permutation_p",
-    "events_purchases_after_signup",
-    "ann_beam_topk_quality",
-    # late-r11 appends: curation/calibration/forecast/spatial/null-model
-    "corpus_anneal_mixture",
-    "quality_threshold_calibration",
-    "cluster_balanced_sample_plan",
-    "events_signup_conversion_outer",
-    "mcnemar_quality_raters",
-    "ljung_box_daily",
-    "contamination_by_source",
-    "ses_forecast_mase",
-    "map_radius_search",
-    "raup_crick_null",
-    "stylometry_burrows_delta",
-    "kmv_set_intersection",
-    "loglogistic_rank_regression",
-    "holt_linear_mase",
-    "quality_score_auc",
-    "retention_halflife_fit",
-    "ljung_box_remainder",
-    "daily_revenue_periodogram",
-    # --- round-12 additions (append-only tail) ---
-    "dedup_incremental_minhash",
-    "dedup_incremental_exact",
-    "ann_augmented_graph_insert",
-    "beta_diversity_canberra",
-    "attribution_position_based",
-    "anderson_darling_binned",
-    "corpus_novelty_growth_curve",
-    "kpss_level_stat",
-    "cr4_by_part_type",
-    "multimodal_wav_zero_crossings",
-    "rapid_repeat_orders",
-    "quality_filters_agreement",
-    "label_davies_bouldin",
-    "corpus_good_turing",
-    "label_calinski_harabasz",
-    "simper_contributions",
-    "sentence_dedup_census",
-    "pack_budget_sweep",
-    # --- round-13 additions (append-only tail) ---
-    "dist_matrix_store_stats",
-    "dedup_incremental_simhash",
-    "dedup_incremental_embedding",
-    "dedup_tombstone_exact",
-    "dedup_tombstone_minhash",
-    "ann_graph_tombstone_repair",
-    "dedup_maintenance_cycle",
-    "cliffs_delta_priority",
-    "ann_tombstone_search_recall",
-    "dedup_tombstone_simhash",
-    "dedup_tombstone_embedding",
-    "dedup_maintenance_cycle_minhash",
-    # round-14 additions
-    "dedup_sig_store_stats",
-    "index_tombstone_debt",
-    "ann_consolidation_decision",
-    "dedup_index_compact",
-    "ann_graph_consolidate_audit",
-    # round-15 additions: the generation swap + post-swap serving
-    # paths, and the epoch-2 incremental insert
-    "dedup_epoch_promote",
-    "ann_epoch_promote",
-    "dedup_epoch_incremental",
-    "ann_epoch_search_recall",
 )
+
+
+def bench_names(qs) -> list[str]:
+    """CANON first, then every other key of ``qs`` in ``qs`` order."""
+    return [*CANON, *(k for k in qs if k not in CANON)]
 
 
 def force(df) -> int:
@@ -737,7 +279,7 @@ def canon_only() -> int:
 
     for mod in CANON_MODULES:
         importlib.import_module(mod)
-    canon = list(HEADLINE[:N_CANON])
+    canon = list(CANON)
     missing = [n for n in canon if n not in QUERIES]
     if missing:
         raise SystemExit(f"canon-only: keys not registered: {missing}")
@@ -793,7 +335,7 @@ def main() -> int:
 
     spark = get_session("bench")
     qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
+    names = bench_names(qs)
 
     # Warm the JVM/codegen once on the smallest query so query #1 doesn't
     # absorb the session startup cost.
@@ -875,7 +417,7 @@ def main() -> int:
     # lets one good run mask a degraded host, and a median over three
     # back-to-back runs is the cheapest estimator that bounds both
     # tails (VERDICT r7 item 1).
-    canon_set = set(HEADLINE[:N_CANON])
+    canon_set = set(CANON)
     per_query: dict[str, float] = {}
     per_query_cold: dict[str, float] = {}
     canon_med: dict[str, float] = {}
@@ -940,7 +482,7 @@ def main() -> int:
         + dedup_index_build_sec,
         3,
     )
-    canon = [n for n in HEADLINE[:N_CANON] if n in per_query]
+    canon = [n for n in CANON if n in per_query]
     # value_canon: per-query median-of-3 (the r8+ convention);
     # value_canon_min: best-of-2 as emitted in r6/r7, kept so the
     # BENCH_CANON.md trend stays comparable across the change.
@@ -954,82 +496,6 @@ def main() -> int:
     # ONE compact JSON line, hard-capped well under the capture window.
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    # Round-over-round commentary for the judge (BENCH_DETAIL is the
-    # sidecar the driver archives; keep the analysis WITH the numbers)
-    notes = (
-        "r10: canonical movement is instrumented three ways — the "
-        "frozen 47-query subtotal (value_canon, median-of-3), the "
-        "pure-CPU calib_sec probe (r8), and the NEW calib_mem_sec "
-        "probe (fixed 2e8-row repartition through spark.local.dir, "
-        "median-of-3). The r10 isolation experiment (bench.py "
-        "--canon-only: fresh JVM importing only the 9 canonical "
-        "modules) measured +/-25% ambient canonical variance with "
-        "calib_sec flat-to-ANTI-correlated on this Firecracker "
-        "microVM — neighbor memory/IO bandwidth, which ALU-bound "
-        "work cannot see; only deltas that survive BOTH probes and "
-        "per-query medians are plan signals (decomposition in "
-        "BENCH_CANON.md). r11: the ANN index persists "
-        "(ann/index_store) — ann_index_build_sec is the one-time "
-        "connected-graph construction, paid here explicitly instead "
-        "of inside every graph-search query; greedy/beam/hnsw times "
-        "are now SEARCH-only (expect ~2-4s vs r10's 9.5s "
-        "build-included), and the PQ/IVFADC family reads persisted "
-        "codebooks/coarse tables the first query trains. Tail "
-        "appends this round: ann_hnsw_multilayer_search, "
-        "ann_jl_pool_recall_sweep, anosim_permutation_p, "
-        "permanova_permutation_p, events_purchases_after_signup; "
-        "late-r11: corpus_anneal_mixture, quality_threshold_"
-        "calibration, cluster_balanced_sample_plan, events_signup_"
-        "conversion_outer, mcnemar_quality_raters, ljung_box_daily, "
-        "contamination_by_source, ses_forecast_mase, "
-        "map_radius_search, raup_crick_null. r13: the comparison-page "
-        "distance matrices persist (operators/diststore via "
-        "ann/index_store) — dist_index_build_sec is the one-time "
-        "build; anosim/permanova/permutation/dispersion/simper/pcoa "
-        "are now store READS (bench ranks #1/#2 in r12 — "
-        "anosim_permutation_p 12.4s, permanova_permutation_p 10.5s — "
-        "were almost entirely repeated pair-former work). scale_check "
-        "is per-query best-of-2 with a symmetric dist-store prebuild "
-        "(r12 VERDICT item 6: a single cold scale run let disk "
-        "stalls/first-touch builds invert slopes). Tail appends this "
-        "round: dist_matrix_store_stats, dedup_incremental_simhash, "
-        "dedup_incremental_embedding, dedup_tombstone_exact, "
-        "dedup_tombstone_minhash, ann_graph_tombstone_repair. r14: "
-        "the dedup signature substrate persists (dedup/sigstore via "
-        "ann/index_store) — dedup_index_build_sec is the one-time "
-        "signature/pair/CC-label build; dedup_minhash_lsh, "
-        "dedup_simhash, dedup_ngram_jaccard, dedup_cluster_cc, "
-        "corpus_near_dedup_keep_first, lsh_bucket_profile and every "
-        "census composing them are now store READS (the r13 bench "
-        "ranks #8-#25 block — family_agreement 5.55s, keep_first "
-        "5.22s, survival 5.05s — was repeated signature-former "
-        "work); scale_check prebuilds the dedup store symmetrically. "
-        "Tail appends this round: dedup_sig_store_stats, "
-        "index_tombstone_debt, ann_consolidation_decision, "
-        "dedup_index_compact, ann_graph_consolidate_audit (the last "
-        "two landed after the r14 local bench; session probes: both "
-        "sub-second warm at sf0.1, colds are the one-time survivor "
-        "index/graph publishes). r15: the exact ground-truth tables "
-        "persist (ann/truthstore via ann/index_store; built inside "
-        "ann_index_build_sec and the symmetric scale prebuild) — "
-        "ann_bruteforce_topk is now a truth_topk_cos read and "
-        "ann_beam_topk_quality / ann_tombstone_search_recall / the "
-        "recall sweeps score against stored truth (their r14 times "
-        "5.73s / 5.16s carried a per-eval truth recompute). Tail "
-        "appends this round: dedup_epoch_promote, ann_epoch_promote, "
-        "dedup_epoch_incremental, ann_epoch_search_recall (the "
-        "generation swap completing the consolidate lifecycle). NEW "
-        "bucketed_layout section: lineitem/orders co-bucketed by "
-        "order key, the three recurring fact-fact join shapes timed "
-        "plain-parquet vs bucketed with executed-plan Exchange "
-        "counts, broadcast disabled on both paths (the 100 TB "
-        "regime's decision, measured). late-r15: the k-means final "
-        "assignment persists (km_assign, built inside "
-        "ann_index_build_sec and the symmetric scale prebuild, the "
-        "PQ-codes lifecycle) — kmeans_embeddings and "
-        "cluster_balanced_sample_plan are now store READS (session "
-        "A/B: 3.2s -> 0.15s and 2.1s -> 0.6s warm)."
     )
     with open(detail_path, "w") as fh:
         json.dump(
@@ -1045,7 +511,6 @@ def main() -> int:
                 "dist_index_build_sec": dist_index_build_sec,
                 "dedup_index_build_sec": dedup_index_build_sec,
                 "n_canon": len(canon),
-                "notes": notes,
                 "value_cold": round(sum(per_query_cold.values()), 3),
                 "unit": "sec",
                 "sf": sf,

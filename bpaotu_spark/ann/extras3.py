@@ -928,7 +928,11 @@ def ann_hnsw_layered_search(
         wl1 = Window.partitionBy("src").orderBy("d2l", "dst")
         l1knn = (
             a.join(b, F.col("src") != F.col("dst"))
-            .select("src", "dst", d2("qa", "qb").cast("long").alias("d2l"))
+            .select(
+                "src",
+                "dst",
+                grid_d2(F.col("qa"), F.col("qb"), dim=None).alias("d2l"),
+            )
             .withColumn("rn", F.row_number().over(wl1))
             .filter(F.col("rn") <= _L1_K)
             .select("src", "dst")
@@ -1156,7 +1160,9 @@ def ann_beam_topk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         if int(r[2]) == 1:
             nn1[int(r[0])] = int(r[1])
     rows = []
-    for q in sorted(front):
+    # the oracle inner-joins on the truth rows: a query without its
+    # true NN has no report row (nn1's keys are a subset of truth10's)
+    for q in sorted(front.keys() & nn1.keys()):
         flist = [n for (_, n) in front[q]]  # (d2, node) order IS frank
         hits = len(set(truth10[q]) & set(flist[:_QUAL_K]))
         frank = flist.index(nn1[q]) + 1 if nn1[q] in flist else None

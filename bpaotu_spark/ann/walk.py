@@ -234,9 +234,10 @@ def walk_report(
     identical integer arithmetic (`div` on non-negative BIGINTs ==
     Python // here) and returned as a literal frame: (query_id,
     found_id, found_d2, true_id, true_d2, exact_hit,
-    dist_ratio_milli), ordered by query_id."""
+    dist_ratio_milli), ordered by query_id. A query with no truth row
+    has no report row (the oracles inner-join found with truth)."""
     rows = []
-    for q in sorted(found):
+    for q in sorted(found.keys() & truth.keys()):
         fid, fd2 = found[q]
         tid, td2 = truth[q]
         rows.append(

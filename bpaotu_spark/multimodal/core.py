@@ -472,20 +472,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_frames(decoded: DataFrame, step: int = FRAME_STEP) -> DataFrame:
-    """Library form of the frame sampler for arbitrary decoded frames."""
-    frames = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(step))
-    return (
-        decoded.filter(F.col("media_type") == "video")
-        .select("asset_id", F.explode(frames).alias("frame_idx"))
-        .select(
-            "asset_id",
-            "frame_idx",
-            F.md5(F.concat_ws(":", "asset_id", "frame_idx")).alias("frame_key"),
-        )
-    )
-
-
 FEATURE_DIM = 8
 
 FEATURES_SCHEMA = "asset_id bigint, media_type string, feature array<float>"

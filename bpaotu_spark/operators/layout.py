@@ -45,11 +45,6 @@ def _interleave_expr(px: str, sx: str, intdiv: str) -> str:
     return " + ".join(terms)
 
 
-def _probe_bounds(lo_num: int, hi_num: int, den: int, mx: str) -> tuple[str, str]:
-    """Integer probe range [mx*lo_num/den, mx*hi_num/den]."""
-    return f"({mx} * {lo_num})", f"({mx} * {hi_num})"
-
-
 @register(
     "zorder_file_pruning",
     oracle=f"""

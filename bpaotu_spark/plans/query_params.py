@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-from bpaotu_spark.plans.filters import ContextualFilter
+from bpaotu_spark.plans.filters import ContextualFilter, _sql_lit
 from bpaotu_spark.plans.taxonomy import TaxonomyFilter
 
 
@@ -36,7 +36,7 @@ class TraitFilter:
         return F.col(self.field).contains(self.trait)
 
     def sql(self) -> str:
-        return f"contains({self.field}, '{self.trait}')"
+        return f"contains({self.field}, {_sql_lit(self.trait)})"
 
 
 @dataclass(frozen=True)

@@ -19,6 +19,8 @@ from typing import Literal
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from bpaotu_spark.plans.filters import _sql_lit
+
 
 @dataclass(frozen=True)
 class RankFix:
@@ -47,7 +49,7 @@ class TaxonomyFilter:
         parts = []
         for fix in self.fixed:
             op = "!=" if fix.negated else "="
-            parts.append(f"{self.ranks[fix.rank]} {op} '{fix.value}'")
+            parts.append(f"{self.ranks[fix.rank]} {op} {_sql_lit(fix.value)}")
         return " AND ".join(parts) if parts else "TRUE"
 
     def next_rank(self) -> str:

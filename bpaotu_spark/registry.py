@@ -10,7 +10,12 @@ columns by name).
 
 from __future__ import annotations
 
+import importlib
+import json
+import pkgutil
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,672 +47,52 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def load_all() -> None:
-    """Import every operator module so registrations run."""
-    import bpaotu_spark.operators.olap  # noqa: F401
-    import bpaotu_spark.operators.olap2  # noqa: F401
-    import bpaotu_spark.operators.olap3  # noqa: F401
-    import bpaotu_spark.operators.olap4  # noqa: F401
-    import bpaotu_spark.operators.events  # noqa: F401
-    import bpaotu_spark.operators.bpaotu  # noqa: F401
-    import bpaotu_spark.operators.pipeline  # noqa: F401
-    import bpaotu_spark.operators.ordination  # noqa: F401
-    import bpaotu_spark.operators.ecology  # noqa: F401
-    import bpaotu_spark.functions.textops2  # noqa: F401
-    import bpaotu_spark.operators.layout  # noqa: F401
-    import bpaotu_spark.operators.audit  # noqa: F401
-    import bpaotu_spark.operators.pipeline2  # noqa: F401
-    import bpaotu_spark.operators.graph  # noqa: F401
-    import bpaotu_spark.operators.robust  # noqa: F401
-    import bpaotu_spark.functions.textops3  # noqa: F401
-    import bpaotu_spark.operators.ecology2  # noqa: F401
-    import bpaotu_spark.operators.drift  # noqa: F401
-    import bpaotu_spark.operators.survival  # noqa: F401
-    import bpaotu_spark.operators.timeseries2  # noqa: F401
-    import bpaotu_spark.operators.stats2  # noqa: F401
-    import bpaotu_spark.operators.growth  # noqa: F401
-    import bpaotu_spark.dedup.core  # noqa: F401
-    import bpaotu_spark.ann.core  # noqa: F401
-    import bpaotu_spark.functions.textops  # noqa: F401
-    import bpaotu_spark.multimodal.core  # noqa: F401
-    import bpaotu_spark.functions.seqsim  # noqa: F401
-    import bpaotu_spark.operators.quality  # noqa: F401
-    import bpaotu_spark.operators.intervals  # noqa: F401
-    import bpaotu_spark.operators.ecology3  # noqa: F401
-    import bpaotu_spark.operators.olap5  # noqa: F401
-    import bpaotu_spark.operators.stats3  # noqa: F401
-    import bpaotu_spark.ann.extras  # noqa: F401
-    import bpaotu_spark.functions.textops4  # noqa: F401
-    import bpaotu_spark.operators.events2  # noqa: F401
-    import bpaotu_spark.functions.textops5  # noqa: F401
-    import bpaotu_spark.operators.stats4  # noqa: F401
-    import bpaotu_spark.operators.ecology4  # noqa: F401
-    import bpaotu_spark.ann.extras2  # noqa: F401
-    import bpaotu_spark.operators.stats5  # noqa: F401
-    import bpaotu_spark.operators.olap6  # noqa: F401
-    import bpaotu_spark.functions.textops6  # noqa: F401
-    import bpaotu_spark.operators.stats6  # noqa: F401
-    import bpaotu_spark.operators.events3  # noqa: F401
-    import bpaotu_spark.operators.olap7  # noqa: F401
-    import bpaotu_spark.ann.extras3  # noqa: F401
-    import bpaotu_spark.operators.audit2  # noqa: F401
-    import bpaotu_spark.operators.survival2  # noqa: F401
-    import bpaotu_spark.operators.ecology5  # noqa: F401
-    import bpaotu_spark.operators.quality2  # noqa: F401
-    import bpaotu_spark.ann.graphconn  # noqa: F401
-    import bpaotu_spark.ann.jl  # noqa: F401
-    import bpaotu_spark.ann.hnswml  # noqa: F401
-    import bpaotu_spark.operators.permtest  # noqa: F401
-    import bpaotu_spark.operators.pipeline3  # noqa: F401
-    import bpaotu_spark.ann.curation  # noqa: F401
-    import bpaotu_spark.operators.stats7  # noqa: F401
-    import bpaotu_spark.operators.spatial  # noqa: F401
-    import bpaotu_spark.dedup.incremental  # noqa: F401
-    import bpaotu_spark.operators.ecology6  # noqa: F401
-    import bpaotu_spark.operators.events4  # noqa: F401
-    import bpaotu_spark.operators.stats8  # noqa: F401
-    import bpaotu_spark.operators.olap8  # noqa: F401
-    import bpaotu_spark.operators.quality3  # noqa: F401
-    import bpaotu_spark.ann.extras4  # noqa: F401
-    import bpaotu_spark.functions.textops7  # noqa: F401
-    import bpaotu_spark.operators.diststore  # noqa: F401
-    import bpaotu_spark.dedup.tombstone  # noqa: F401
-    import bpaotu_spark.ann.tombstone  # noqa: F401
-    import bpaotu_spark.operators.stats9  # noqa: F401
-    import bpaotu_spark.dedup.sigstore  # noqa: F401
-    import bpaotu_spark.operators.consolidate  # noqa: F401
-    import bpaotu_spark.operators.epoch  # noqa: F401
+    """Import every submodule of the package so registrations run."""
+    import bpaotu_spark
+
+    for mod in pkgutil.walk_packages(bpaotu_spark.__path__, "bpaotu_spark."):
+        importlib.import_module(mod.name)
 
 
-# Exposure order for the driver's correctness sweep. The driver checks
-# queries() entries in dict order with a bounded window (~50 rows per
-# round), so this list decides WHICH operators get a driver-verified
-# row each round.
-#
-# Rotation rule (apply EVERY round): any operator whose Spark plan or
-# oracle SQL changed since its last driver-green CORRECTNESS row must
-# appear within the first 50 entries. Order groups: (A) changed this
-# round, (B) changed in a prior round but not yet re-verified by the
-# driver, (C) operators whose last green row is oldest, (D) the
-# mandated LLM-pipeline family (kept in-window so the judge sees fresh
-# rows each round). Long-green rows rotate out to the tail — they stay
-# covered by tools/check.py locally.
-PRIORITY: tuple[str, ...] = (
-    # ---- ROUND-15 WINDOW (driver verifies the first ~50) ----
-    # (A) the two late-r14 operators that landed one/two slots past
-    # the window boundary (the r14 verdict's only process miss; both
-    # judge-verified at two SFs but without a driver row) — they lead
-    # the window so CORRECTNESS_r15 finally records them:
-    "dedup_index_compact",
-    "ann_graph_consolidate_audit",
-    # (B) NEW this round — the r14 VERDICT punch list:
-    #  - dedup_epoch_promote / ann_epoch_promote: the GENERATION SWAP
-    #    completing the consolidate lifecycle (promote the survivor
-    #    *_compact / conn_edges_rebuilt artifacts to the serving base,
-    #    reset the tombstone set, prove promoted ≡ fresh-build-over-
-    #    survivors — FreshDiskANN §4's missing half; VERDICT #2).
-    #  - dedup_epoch_incremental: post-promote inserts land on the
-    #    new base (no tombstone filter on the path).
-    #  - ann_epoch_search_recall: the post-swap query path — beam walk
-    #    over the promoted graph vs the persisted survivor truth.
-    "dedup_epoch_promote",
-    "ann_epoch_promote",
-    "dedup_epoch_incremental",
-    "ann_epoch_search_recall",
-    # (C) plan-CHANGED this round (VERDICT #3): the recall-eval family
-    # now scores against PERSISTED exact ground truth
-    # (ann/truthstore.py) — ann_bruteforce_topk is itself the stored
-    # truth_topk_cos read; the sweeps/reports compose it; the beam
-    # quality / tombstone recall truth legs read the grid artifacts.
-    "ann_bruteforce_topk",
-    "ann_recall_report",
-    "ann_recall_at_k_sweep",
-    "ann_beam_topk_quality",
-    "ann_tombstone_search_recall",
-    # (C2) plan-CHANGED by the r15 OPTIMIZATION pass — every key whose
-    # physical plan this round restructured must carry a fresh driver
-    # row (r13/r14 convention): the two permutation tests collapsed
-    # their 33x pair fan-out to one bitmask pass; the bootstrap
-    # materializes its md5 draw out of the CASE chain; the PCA Gram
-    # matrix became a per-partition integer matmul; the hotlist
-    # doc-frequency is one exchange instead of two; and the four
-    # graph walkers read the persisted exact-NN truth instead of
-    # recomputing it per run.
-    "anosim_permutation_p",
-    "permanova_permutation_p",
-    "order_value_poisson_bootstrap",
-    "embedding_pca_power_axis",
-    "boilerplate_ngram_hotlist",
-    "ann_greedy_graph_search",
-    "ann_beam_graph_search",
-    "ann_hnsw_layered_search",
-    "ann_hnsw_multilayer_search",
-    # (C3) plan-CHANGED by the r15 optimization pass, second batch:
-    # recompute-elimination barriers (localCheckpoint at the shared
-    # frontier) in cluster_balanced_sample_plan / minhash_union_
-    # cardinality / quality_filters_agreement / beta_diversity_
-    # braycurtis (+ its composition sample_neighbors_topk) /
-    # basket_brand_lift; the winnow pair
-    # former's self-join became a capped in-row pair explode (its key
-    # is already in the rotation block below); and the sign-LSH
-    # embedding pair table + its CC labels are store-served
-    # (dedup_embedding_lsh, corpus_semantic_dedup_keep_first).
-    # (C4, late-r15) the Lloyd-chain assignment became a store-served
-    # ANN-index artifact (km_assign): kmeans_embeddings and
-    # cluster_balanced_sample_plan are now pure reads of it — both
-    # plan-changed, both must carry a fresh driver row.
-    "kmeans_embeddings",
-    "cluster_balanced_sample_plan",
-    "dedup_embedding_lsh",
-    "corpus_semantic_dedup_keep_first",
-    "minhash_union_cardinality",
-    "quality_filters_agreement",
-    "beta_diversity_braycurtis",
-    "sample_neighbors_topk",
-    "basket_brand_lift",
-    # (C5) plan-CHANGED by the r15 optimization pass, third batch: the
-    # connected-graph census reads the four store-served construction
-    # frames (conn_eknn/emp/bridges/comp1) instead of re-running the
-    # build, and the unweighted-UniFrac pair artifact is built by the
-    # bitmask-interior pair former — both must carry a fresh driver
-    # row against their unchanged from-scratch oracles.
-    "knn_graph_connected",
-    "unifrac_unweighted",
-    "dedup_embedding",
-    "faith_pd_taxonomy",
-    "krona_rollup",
-    "ordination_pcoa_2d",
-    # (C6) plan-CHANGED, fourth batch: the LSH kNN edge table is a
-    # store artifact (build-once, ann/index_store) and the whole
-    # census family READS it — ten consumers plus the edge table
-    # itself, all verified against unchanged from-scratch oracles.
-    "knn_graph_lsh",
-    "knn_triangle_count",
-    "knn_graph_components",
-    "knn_vote_accuracy",
-    "intrinsic_dimension_twonn",
-    "knn_shared_neighbor_histogram",
-    "knn_hubness_histogram",
-    "pagerank_knn",
-    "knn_degree_assortativity",
-    "knn_reciprocity",
-    "knn_two_hop_reach",
-    "data_expectations_audit",
-    # (D) rotation (VERDICT #5): the entire 36-key r4-evidence cohort
-    # plus the three oldest r5 keys — after this window no key's
-    # latest driver evidence is older than r5.
-    "cumulative_share_daily",
-    "daily_revenue_anomaly",
-    "decile_stats",
-    "dedup_ngram_coverage",
-    "dedup_winnow_pairs",
-    "doc_chunk_sliding",
-    "embedding_dim_stats",
-    "embedding_label_centroids",
-    "event_interarrival_stats",
-    "lang_length_quartiles",
-    "lang_temperature_sample",
-    "median_exact_by_segment",
-    "moving_avg_window",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_share",
-    "q17_small_quantity_revenue",
-    "q1_pricing_summary",
-    "q2_min_price_supplier",
-    # knn_graph_lsh: r14 plan-identical refactor (shared emb prep via
-    # knn_graph_from) never driver-re-verified — last row r6; it takes
-    # the final window slot ahead of further r5 rotation.
-    # ---- 50-entry window boundary ----
-    # displaced by the late-r15 C4 key (driver-green r4,
-    # plan-identical this round):
-    "q3_shipping_priority",
-    # displaced by the 9 C3 plan-changed keys (all driver-green r4 and
-    # plan-identical this round; next rotation cohort after the epoch/
-    # optimization keys age out):
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q9_product_profit",
-    "sessionize_events",
-    "table_profile",
-    "text_fingerprint",
-    "topk_per_group",
-    "vector_quantize_int8",
-    "window_functions_suite",
-    "otu_indicator_species",
-    # displaced by the 9 r15 plan-changed keys (all nine below are
-    # driver-green in a prior round and plan-identical this round):
-    "attribution_last_touch",
-    "cohort_ltv_matrix",
-    "text_langid",
-    "text_quality",
-    "text_repetition_ratio",
-    "text_token_count",
-    "text_winnow_fingerprints",
-    "token_vocab_coverage",
-    "text_unigram_logloss",
-    "customer_pareto_share",
-    # Covered tail — every key below is driver-green in a prior round
-    # and unchanged; r14-window keys displaced by the r15 sweep queue
-    # in their prior order.
-    "dedup_sig_store_stats",
-    "index_tombstone_debt",
-    "ann_consolidation_decision",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_cluster_cc",
-    "corpus_near_dedup_keep_first",
-    "lsh_bucket_profile",
-    "unifrac_weighted",
-    "dedup_family_agreement",
-    "dedup_family_histogram",
-    "dedup_survival_by_source",
-    "dedup_cross_source_matrix",
-    "dedup_band_threshold_sweep",
-    "dedup_lsh_recall_report",
-    "corpus_final_verdict",
-    "entropy_dedup_calibration",
-    "dedup_incremental_minhash",
-    "dedup_incremental_simhash",
-    "dedup_tombstone_embedding",
-    "contextual_filter_or",
-    "corpus_token_stats",
-    "dedup_exact",
-    "distinct_parts_per_brand",
-    "events_rollup_reuse",
-    "events_session_window",
-    "events_windowed_agg",
-    "export_long_abundance",
-    "funnel_conversion",
-    "json_extraction",
-    "map_binning_2d",
-    "otu_query_combined",
-    "otu_text_search",
-    "sample_stratified",
-    "sample_summary",
-    "taxonomy_drilldown",
-    "taxonomy_isnot_filter",
-    "tfidf_top_terms",
-    "train_test_split",
-    "bm25_search",
-    "corpus_clean_pipeline",
-    "corpus_decontaminate",
-    "corpus_pack_sequences",
-    "dist_matrix_store_stats",
-    "dedup_incremental_embedding",
-    "dedup_tombstone_exact",
-    "dedup_tombstone_minhash",
-    "ann_graph_tombstone_repair",
-    "dedup_maintenance_cycle",
-    "cliffs_delta_priority",
-    "dedup_tombstone_simhash",
-    "dedup_maintenance_cycle_minhash",
-    "anosim_groups",
-    "permanova_pseudo_f",
-    "beta_dispersion_groups",
-    "simper_contributions",
-    "anderson_darling_binned",
-    "multimodal_wav_zero_crossings",
-    "approx_distinct_parts",
-    "tfidf_top_terms_approx",
-    "cohort_retention_matrix",
-    "cube_returns",
-    "grouping_sets_mixed",
-    "histogram_binning",
-    "pivot_wide",
-    "q16_antijoin_parts",
-    "q18_large_orders",
-    "q19_disjunctive_pushdown",
-    "q22_global_sales_opportunity",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q7_nation_volume",
-    "range_join_bucketed",
-    "retention_daily",
-    "rollup_hierarchy",
-    "skew_salted_join",
-    "abundance_matrix",
-    "alpha_diversity",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "asof_join",
-    "blast_kmer_similarity",
-    "contextual_fields_catalog",
-    "contextual_filter_and",
-    "corpus_anneal_mixture",
-    "mcnemar_quality_raters",
-    "ljung_box_daily",
-    "contamination_by_source",
-    "ses_forecast_mase",
-    "map_radius_search",
-    "raup_crick_null",
-    "stylometry_burrows_delta",
-    "kmv_set_intersection",
-    "loglogistic_rank_regression",
-    "holt_linear_mase",
-    "quality_score_auc",
-    "retention_halflife_fit",
-    "ljung_box_remainder",
-    "daily_revenue_periodogram",
-    "quality_threshold_calibration",
-    "events_signup_conversion_outer",
-    "part_price_size_skyline",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "rare_category_collapse",
-    "revenue_ewma_daily",
-    "segment_nation_mutual_info",
-    "supplier_return_rate",
-    "text_tfidf_cosine_pairs",
-    "token_rate_drift",
-    "weighted_sample_es",
-    "window_funnel_strict",
-    "ann_augmented_graph_insert",
-    "beta_diversity_canberra",
-    "attribution_position_based",
-    "dedup_incremental_exact",
-    "corpus_novelty_growth_curve",
-    "kpss_level_stat",
-    "cr4_by_part_type",
-    "rapid_repeat_orders",
-    "label_davies_bouldin",
-    "corpus_good_turing",
-    "label_calinski_harabasz",
-    "sentence_dedup_census",
-    "pack_budget_sweep",
-    "ann_jl_pool_recall_sweep",
-    "events_purchases_after_signup",
-    "text_tile_dedup_census",
-    "ann_ivfadc_topk",
-    "ann_ivfadc_nprobe_topk",
-    "ann_ivfadc_rerank_topk",
-    "ivfadc_recall_report",
-    "embedding_pq_codebook",
-    "embedding_opq_balance",
-    "ann_sdc_topk",
-    "pq_code_entropy",
-    "ann_opq_adc_topk",
-    "ann_pq_adc_topk",
-    "attribution_time_decay",
-    "bloom_semijoin_filter",
-    "core_microbiome",
-    "corpus_length_token_corr",
-    "corpus_perplexity_filter",
-    "corpus_regex_scrub_apply",
-    "customer_rfm_segments",
-    "daily_revenue_gapfill",
-    "dedup_containment",
-    "dim_broadcast_advisor",
-    "discount_effectiveness",
-    "embedding_jl_distortion",
-    "orders_durbin_watson",
-    "winsorized_mean_by_segment",
-    "ann_jl_topk_recall",
-    "scd2_point_in_time_join",
-    "embedding_triplet_margin",
-    "event_user_paths_topk",
-    "events_hourly_heatmap",
-    "events_rolling_wau",
-    "heavy_hitters_cms",
-    "hierarchy_share_of_parent",
-    "langid_confusion",
-    "lineitem_corr_matrix",
-    "markov_next_event_accuracy",
-    "orders_yoy_growth",
-    "otu_niche_breadth",
-    "otu_region_overlap",
-    "expectations_audit_delta",
-    "events_burst_alarm_windows",
-    "hazard_ratio_segments",
-    "text_word_length_hist",
-    "doc_commonness_profile",
-    "split_contamination_ngrams",
-    "boilerplate_prefix_census",
-    "corpus_shingle_size_sweep",
-    "mann_kendall_trend",
-    "bartlett_test_variances",
-    "chi2_gof_weekday",
-    "sign_test_paired_months",
-    "quality_rater_kappa",
-    "event_type_stationary_dist",
-    "events_inactivity_gaps_topk",
-    "events_peak_detection_daily",
-    "customer_order_gini",
-    "order_linecount_priority_profile",
-    "part_type_price_quartiles",
-    "revenue_lorenz_points",
-    "supplier_catalog_breadth",
-    "ann_top1_margin_histogram",
-    "embedding_split_centroid_shift",
-    "shuffle_partition_advisor",
-    "cms_width_error_sweep",
-    "restricted_mean_survival",
-    "beta_baselga_partition",
-    "rarity_weighted_richness",
-    "user_lifecycle_weekly",
-    "nation_month_revenue_zscore",
-    "supplier_share_volatility",
-    "reorder_regularity_census",
-    "dedup_savings_by_source",
-    "events_record_days",
-    "orders_monthly_percentile_bridge",
-    "taxonomy_level_diversity",
-    "event_value_percentiles_by_type",
-    "doc_length_quality_grid",
-    "brand_nation_penetration",
-    "user_hour_entropy_census",
-    "customer_brand_loyalty_hhi",
-    "priority_mix_jsd_monthly",
-    "doc_ngram_rep_profile",
-    "embedding_outlier_topk",
-    "corpus_char_trigram_entropy",
-    "doc_fourgram_compressibility",
-    "bpe_merge_candidates",
-    "beta_diversity_jaccard",
-    "export_biom_triplets",
-    "beta_diversity_morisita_horn",
-    "mantel_test_gradient",
-    "beta_diversity_sorensen",
-    "gamma_diversity_partition",
-    "otu_endemism",
-    "dedup_splice_pairs",
-    "doc_script_mix",
-    "ann_range_query_count",
-    "friedman_test_weekday",
-    "grubbs_outlier_daily",
-    "page_hinkley_drift",
-    "jonckheere_terpstra_trend",
-    "life_table_actuarial",
-    "event_type_entropy",
-    "beta_diversity_kulczynski",
-    "chao2_incidence",
-    "otu_rank_shift",
-    "daily_acf_lags",
-    "orders_runs_test",
-    "seasonality_strength",
-    "split_unigram_kl",
-    "beta_diversity_ochiai",
-    "sample_coverage_goods",
-    "ann_lsh_multiprobe_topk",
-    "quantiles_exact_by_segment",
-    "seasonal_naive_mase",
-    "label_silhouette_centroid",
-    "parts_slow_mover_detection",
-    "orders_hhi_by_nation",
-    "text_sentence_profile",
-    "embedding_norm_vs_label_anova",
-    "events_trending_topk",
-    "ab_cuped_adjustment",
-    "abundance_rarefaction",
-    "ann_filtered_topk",
-    "kruskal_wallis_h",
-    "vector_quantize_int4_error",
-    "theil_sen_revenue_trend",
-    "kendall_tau_daily",
-    "berger_parker_dominance",
-    "embedding_dim_covariance",
-    "events_sliding_window_agg",
-    "association_rules_parts",
-    "orders_abc_classification",
-    "skipgram_pmi_topk",
-    "parts_xyz_classification",
-    "mann_whitney_order_value",
-    "ann_index_size_report",
-    "logrank_reorder_test",
-    "pack_fill_report",
-    "spearman_part_size_price",
-    "weibull_rank_regression",
-    "revenue_bridge_yoy",
-    "promo_did_estimate",
-    "label_centroid_distances",
-    "doc_hapax_ratio",
-    "kneser_ney_bigram_ppl",
-    "quantization_error_histogram",
-    "wilcoxon_signed_rank_yoy",
-    "anova_oneway_f",
-    "brown_forsythe_f",
-    "cochran_armitage_trend",
-    "competing_risks_cif",
-    "metric_agreement_topk",
-    "occupancy_abundance_deciles",
-    "session_depth_histogram",
-    "stopword_profile_cosine",
-    "taylor_power_law",
-    "term_burstiness",
-    "ttr_head100",
-    "whittaker_beta_nation",
-    "heldout_oov_rate",
-    "multimodal_features",
-    "ace_richness",
-    "nelson_aalen_hazard",
-    "benford_first_digit",
-    "trimmed_mean_by_segment",
-    "daily_autocorrelation",
-    "heaps_law_estimate",
-    "markov_entropy_rate",
-    "part_supply_resilience",
-    "chao1_richness",
-    "dsir_importance_select",
-    "tokenizer_fertility",
-    "zorder_file_pruning",
-    "curriculum_schedule",
-    "theil_inequality",
-    "source_jsd_matrix",
-    "churn_reactivation_quarterly",
-    "returnflag_drift_yearly",
-    "laspeyres_price_index",
-    "cscore_checkerboard",
-    "weekly_decomposition",
-    "log_log_elasticity",
-    "otu_nestedness_nodf",
-    "event_burstiness_fano",
-    "pareto_tail_alpha",
-    "ks_binned_two_sample",
-    "cramers_v_association",
-    "gumbel_moments_fit",
-    "new_repeat_revenue_monthly",
-    "month_end_lift",
-    "taxa_temporal_drift",
-    "hill_numbers_suite",
-    "bloom_sizing_advisor",
-    "two_way_effects",
-    "ab_test_sizing",
-    "order_size_dispersion",
-    "error_budget_burn",
-    "price_lognormal_fit",
-    "map_tiles_pyramid",
-    "kaplan_meier_order_gaps",
-    "markov_absorption_3step",
-    "multimodal_wav_rms",
-    "multimodal_phash_dedup",
-    "multimodal_phash_near_pairs",
-    "embedding_prefix_recall",
-    "corpus_regex_scrub_report",
-    "event_debounce_dedup",
-    "ivf_cell_balance_report",
-    "embedding_cell_residual_stats",
-    "approx_distinct_kmv",
-    "heldout_bigram_perplexity",
-    "ccnet_perplexity_tertiles",
-    "gopher_quality_rules",
-    "scd2_user_state_intervals",
-    "revenue_cusum_changepoint",
-    "embedding_cosine_pair_histogram",
-    "bloom_fpp_measured",
-    "centroid_assignment_accuracy",
-    "pielou_evenness",
-    "rank_abundance_curve",
-    "order_price_reconciliation",
-    "join_skew_audit",
-    "kfold_assignment",
-    "partition_balance_audit",
-    "species_accumulation_curve",
-    "rapid_fire_users",
-    "revenue_v_shape_patterns",
-    "token_budget_apportion",
-    "contextual_filter_upset",
-    "embedding_dim_quantiles",
-    "scd2_containment_audit",
-    "markov_calibration_reliability",
-    "scd2_dwell_time_stats",
-    "bigram_pmi",
-    "multimodal_meta",
-    "multimodal_decode",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "orders_open_backlog_daily",
-    "robust_anomaly_mad",
-    "text_bigram_logloss",
-    "dedup_levenshtein",
-    "minhash_jaccard_estimate",
-    "corpus_mixture_plan",
-    "taxa_cooccurrence",
-    "rarefaction_curve",
-    "funnel_time_to_convert",
-    "revenue_seasonality_weekday",
-    "order_fulfillment_latency",
-    "supplier_lead_time_trend",
-    "zipf_token_stats",
-    "repeat_purchase_intervals",
-    "part_brand_hhi",
-    "event_type_transitions",
-    "session_bounce_rate",
-    "user_stickiness_monthly",
-    "source_novelty_ngrams",
-    "embedding_norm_profile",
-    "nation_trade_flow",
-    "part_size_price_corr",
-    "event_value_daily_median",
-    "otu_prevalence_spectrum",
-    "source_length_gini",
-    "text_token_entropy",
-    "customer_value_band_migration",
-    "q15_top_supplier",
-    "q20_part_promotion_suppliers",
-    "q21_sole_blame_supplier",
-    "source_quality_report",
-)
+_EVIDENCE_RE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
-def ordered_queries() -> dict[str, QueryFn]:
-    """QUERIES reordered: PRIORITY keys first, the rest in registration
-    order, oracle-less (rows-only) entries last so they never consume a
-    slot of the driver's bounded oracle-compare window.
-
-    A PRIORITY key that is not registered would silently demote the
-    intended operator out of the driver's verification window — exactly
-    the failure the list exists to prevent — so it is a hard error.
-    """
-    if len(set(PRIORITY)) != len(PRIORITY):
-        dupes = sorted({k for k in PRIORITY if PRIORITY.count(k) > 1})
-        raise ValueError(f"duplicate PRIORITY keys: {dupes}")
-    unknown = sorted(set(PRIORITY) - set(QUERIES))
-    if unknown:
-        raise ValueError(f"PRIORITY keys not registered: {unknown}")
-    rest = [k for k in QUERIES if k not in PRIORITY]
-    tail_backed = [k for k in rest if k in ORACLES]
-    tail_rows_only = [k for k in rest if k not in ORACLES]
-    out: dict[str, QueryFn] = {}
-    for k in (*PRIORITY, *tail_backed, *tail_rows_only):
-        out[k] = QUERIES[k]
+def last_green_rounds(evidence_dir: str | Path) -> dict[str, int]:
+    """Each key's last driver-green round in ``evidence_dir``'s
+    ``CORRECTNESS_r<N>.json`` files. A row is green when rows, schema
+    and hash all match and it carries no error."""
+    out: dict[str, int] = {}
+    for path in Path(evidence_dir).glob("CORRECTNESS_r*.json"):
+        m = _EVIDENCE_RE.fullmatch(path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for key, row in json.loads(path.read_text()).items():
+            green = all(
+                row.get(f) is True
+                for f in ("rows_match", "schema_match", "hash_match")
+            )
+            if green and row.get("err") is None:
+                out[key] = max(out.get(key, 0), rnd)
     return out
+
+
+def ordered_queries(evidence_dir: str | Path = _REPO_ROOT) -> dict[str, QueryFn]:
+    """QUERIES in the driver's correctness-sweep order.
+
+    The driver checks a bounded prefix (~50 keys a round) of this
+    order, so the keys whose last driver-green round is oldest lead;
+    a key with no green row counts as round 0 and comes first. Ties
+    keep registration order. Oracle-less (rows-only) keys come last so
+    they never take a slot of the oracle-compare window. The evidence
+    is read from ``evidence_dir`` (default: the repository root, where
+    the driver's rounds are committed); with no evidence files this is
+    registration order, rows-only keys last.
+    """
+    green = last_green_rounds(evidence_dir)
+    order = sorted(
+        QUERIES,
+        key=lambda k: (0, green.get(k, 0)) if k in ORACLES else (1, 0),
+    )
+    return {k: QUERIES[k] for k in order}

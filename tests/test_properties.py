@@ -2,8 +2,9 @@
 
 The engine's core drift-proofing claim is that one spec emits BOTH the
 Spark predicate and the oracle SQL. These properties hammer that claim
-with generated specs and data: for any ContextualFilter, Spark and
-DuckDB must select exactly the same rows.
+with generated specs and data: for any ContextualFilter,
+TaxonomyFilter or TraitFilter, Spark and DuckDB must select exactly
+the same rows.
 """
 
 from __future__ import annotations
@@ -11,9 +12,11 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from bpaotu_spark.plans.filters import ContextualFilter, Pred
+from bpaotu_spark.plans.query_params import TraitFilter
+from bpaotu_spark.plans.taxonomy import RankFix, TaxonomyFilter
 
 # Bounded value domains keep generated predicates type-correct.
 _num = st.one_of(
@@ -50,6 +53,16 @@ def filters(draw):
     return ContextualFilter.of(ps, mode)
 
 
+# The other dual-emission specs over the same string column: a
+# one-rank taxonomy fix and a trait containment.
+_taxonomy = st.builds(
+    lambda v, neg: TaxonomyFilter(("str_col",), (RankFix(0, v, neg),)),
+    _txt,
+    st.booleans(),
+)
+_trait = st.builds(lambda v: TraitFilter("str_col", v), _txt)
+
+
 _ROWS = [
     (0, 5.0, "abc"),
     (1, -3.5, "a%b"),
@@ -77,7 +90,9 @@ def duck():
     return con
 
 
-@given(cf=filters())
+@given(cf=st.one_of(filters(), _taxonomy, _trait))
+@example(cf=TaxonomyFilter(("str_col",), (RankFix(0, "x'y"),)))
+@example(cf=TraitFilter("str_col", "x'y"))
 @settings(max_examples=60, deadline=None, suppress_health_check=list(HealthCheck))
 def test_filter_spark_matches_duckdb(cf, spark_df, duck):
     spark_ids = {r.id for r in spark_df.filter(cf.column()).select("id").collect()}

@@ -118,3 +118,43 @@ def test_walk_report_integer_div_semantics(spark):
         "bigint", "bigint", "bigint", "bigint", "bigint", "boolean",
         "bigint",
     ]
+
+
+def test_walk_report_skips_query_without_truth(spark):
+    """A query with no truth row has no report row — the oracles
+    inner-join found with truth — instead of raising KeyError."""
+    from bpaotu_spark.ann.walk import walk_report
+
+    found = {0: (7, 0), 1: (8, 5), 2: (4, 9)}
+    truth = {0: (7, 0), 2: (3, 3)}
+    rows = walk_report(spark, found, truth).collect()
+    assert [int(r["query_id"]) for r in rows] == [0, 2]
+
+
+def test_hnsw_layered_search_cold_store_matches_oracle(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """On an empty index store the op builds every artifact itself,
+    the layer-1 k-NN graph included, and must still equal its DuckDB
+    oracle."""
+    import duckdb
+
+    from bpaotu_spark.ann import index_store
+    from bpaotu_spark.registry import ORACLES, QUERIES, load_all
+
+    load_all()
+    monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
+    index_store._MEM.clear()
+    try:
+        sdf = QUERIES["ann_hnsw_layered_search"](spark, sf_dir)
+        got = sorted(tuple(r) for r in sdf.collect())
+    finally:
+        index_store._MEM.clear()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    cur = con.execute(ORACLES["ann_hnsw_layered_search"])
+    assert sdf.columns == [d[0] for d in cur.description]
+    want = sorted(tuple(r) for r in cur.fetchall())
+    assert got and got == want
