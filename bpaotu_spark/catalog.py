@@ -9,14 +9,34 @@ push filters / prune columns into it.
 At 100 TB the same function signature points at a partitioned parquet
 lake (or an external catalog); nothing downstream changes because every
 operator takes DataFrames, not paths.
+
+Schema memo: inferring a parquet schema runs a Spark job (~0.1 s a
+table), so ``load_table`` infers each table's schema once and later
+calls read with ``.schema(...)``: a warm call runs no job. Every call
+still returns a fresh, lazily planned DataFrame; only the
+``StructType`` is memoized.
+
+- Key: the real table path plus the session values of
+  ``_INFERENCE_CONFS`` (the confs that change what inference returns).
+  An entry is served only while its stamp, the (real path, size,
+  mtime_ns, inode) of every file under the table path, still matches;
+  a new stamp replaces the entry.
+- Size: at most one entry per (path, confs), and never more than
+  ``SCHEMA_MEMO_CAP`` entries in all (oldest evicted first).
+- A path that ``os.stat`` cannot see (a non-local scheme) is inferred
+  on every call, as before.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -122,6 +142,66 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(par, *keys) if keys else df.repartition(par)
 
 
+# Session confs that change the schema parquet inference returns for
+# the same files; their values are part of the memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# Hard cap on memoized schemas: an sf_dir holds ten tables, so six data
+# directories (or conf variants) fit before the oldest is evicted.
+SCHEMA_MEMO_CAP = 64
+# (real path, conf values) -> (file stamp, inferred schema)
+_SCHEMAS: OrderedDict[tuple, tuple[tuple, StructType]] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_stamp(path: str) -> tuple:
+    """(real path, size, mtime_ns, inode) of every file under ``path``
+    (a file or a directory); OSError if the local file system cannot
+    see ``path``."""
+    root = os.path.realpath(path)
+    st = os.stat(root)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((root, st.st_size, st.st_mtime_ns, st.st_ino),)
+    stamp = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.realpath(os.path.join(d, f))
+            s = os.stat(p)
+            stamp.append((p, s.st_size, s.st_mtime_ns, s.st_ino))
+    return tuple(sorted(stamp))
+
+
+def _memo_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, memoized (see the
+    module docstring); None for a path outside the local file system."""
+    try:
+        stamp = _file_stamp(path)
+    except OSError:
+        return None
+    key = (
+        os.path.realpath(path),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    # stamp taken BEFORE inference: a file rewritten in between leaves
+    # an entry whose stamp no longer matches, so it is re-inferred
+    schema = spark.read.parquet(path).schema
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.pop(key, None)
+        _SCHEMAS[key] = (stamp, schema)
+        while len(_SCHEMAS) > SCHEMA_MEMO_CAP:
+            _SCHEMAS.popitem(last=False)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
@@ -131,25 +211,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP(MICROS) (plain NTZ read). Keep the legacy conf so the
         # engine still works against nanos-era files under ANY session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    # Driver parquet carries naive (NTZ) timestamps; the session timezone is
-    # pinned UTC, so casting to TIMESTAMP_LTZ preserves the wall-clock instant
-    # and makes unix_millis()/window() available (they reject NTZ). DuckDB
-    # reads the same values as naive and epoch_ms() agrees.
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp_ltz"))
-    if name == "events":
-        # Legacy nanos-era files only: ts read as epoch-nanos BIGINT
-        # (spark.sql.legacy.parquet.nanosAsLong) → truncate to micros, the
-        # same value DuckDB/Arrow readers see. Micros-era files take the
-        # timestamp_ntz → ltz cast above and skip this branch.
-        field = dict(df.dtypes).get("ts")
-        if field == "bigint":
-            # Integer div, NOT `/`: epoch-nanos (~1.7e18) exceed double's
-            # 53-bit mantissa, so float division drifts by ±1 µs/ms.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    path = table_path(sf_dir, name)
+    schema = _memo_schema(spark, path)
+    df = (spark.read.schema(schema) if schema else spark.read).parquet(path)
+    # Driver parquet carries naive (NTZ) timestamps; the session timezone
+    # is pinned UTC, so casting to TIMESTAMP_LTZ preserves the wall-clock
+    # instant and makes unix_millis()/window() available (they reject
+    # NTZ). DuckDB reads the same values as naive and epoch_ms() agrees.
+    casts = {}
+    for field in (schema or df.schema).fields:
+        if isinstance(field.dataType, TimestampNTZType):
+            casts[field.name] = F.col(field.name).cast("timestamp_ltz")
+        elif (
+            name == "events"
+            and field.name == "ts"
+            and isinstance(field.dataType, LongType)
+        ):
+            # Legacy nanos-era files only: ts read as epoch-nanos BIGINT
+            # (spark.sql.legacy.parquet.nanosAsLong) → truncate to micros,
+            # the same value DuckDB/Arrow readers see. Micros-era files
+            # take the NTZ → LTZ cast instead. Integer div, NOT `/`:
+            # epoch-nanos (~1.7e18) exceed double's 53-bit mantissa, so
+            # float division drifts by ±1 µs/ms.
+            casts["ts"] = F.timestamp_micros(F.expr("ts div 1000"))
+    # one projection for all casts; columns keep their positions
+    return df.withColumns(casts) if casts else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -67,7 +67,8 @@ def doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task, and the doc_id repartition pre-satisfies the window's
     # distribution, so the exchange moves from the exploded token
     # stream to the ~3x-smaller raw text rows; no-op on a scan that is
-    # already parallel
+    # already parallel. A/B (plans/r17/dedup_widen_ab.json): faster in
+    # total over the consumers; dedup_containment alone is slower.
     docs = widen_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",

@@ -530,6 +530,41 @@ def markov_calibration_reliability(
 # ---------------------------------------------------------------------------
 
 
+def _lower_median_slope(prc: DataFrame, k: int) -> float:
+    """The k-th smallest ``slope`` of the checkpointed pair frame
+    ``prc`` (k >= 1), by the sketch-bracket selection described in
+    ``theil_sen_revenue_trend``."""
+    lo, hi = prc.agg(
+        F.percentile_approx(
+            "slope", F.array(F.lit(0.498), F.lit(0.502)), F.lit(20000)
+        )
+    ).collect()[0][0]
+    n_lt_lo, n_le_hi = prc.agg(
+        F.sum(
+            F.when(F.col("slope") < F.lit(lo), 1).otherwise(0)
+        ).cast("bigint"),
+        F.sum(
+            F.when(F.col("slope") <= F.lit(hi), 1).otherwise(0)
+        ).cast("bigint"),
+    ).collect()[0]
+    n_lt_lo, n_le_hi = int(n_lt_lo), int(n_le_hi)
+    if n_lt_lo < k <= n_le_hi:
+        band = [
+            r[0]
+            for r in prc.filter(
+                (F.col("slope") >= lo) & (F.col("slope") <= hi)
+            )
+            .select("slope")
+            .collect()
+        ]
+        band.sort()
+        return band[k - n_lt_lo - 1]
+    # sketch bracket missed (not observed; exact-count guarded)
+    allv = [r[0] for r in prc.select("slope").collect()]
+    allv.sort()
+    return allv[k - 1]
+
+
 @register(
     "theil_sen_revenue_trend",
     oracle="""
@@ -630,39 +665,14 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("p"),
         F.sum("sgn").cast("bigint").alias("mk_s"),
     ).collect()[0]
-    p, mk_s_val = int(tot_row[0]), int(tot_row[1])
-    k = (p + 1) // 2
-    lo, hi = prc.agg(
-        F.percentile_approx(
-            "slope", F.array(F.lit(0.498), F.lit(0.502)), F.lit(20000)
-        )
-    ).collect()[0][0]
-    n_lt_lo, n_le_hi = prc.agg(
-        F.sum(
-            F.when(F.col("slope") < F.lit(lo), 1).otherwise(0)
-        ).cast("bigint"),
-        F.sum(
-            F.when(F.col("slope") <= F.lit(hi), 1).otherwise(0)
-        ).cast("bigint"),
-    ).collect()[0]
-    n_lt_lo, n_le_hi = int(n_lt_lo), int(n_le_hi)
-    if n_lt_lo < k <= n_le_hi:
-        band = [
-            r[0]
-            for r in prc.filter(
-                (F.col("slope") >= lo) & (F.col("slope") <= hi)
-            )
-            .select("slope")
-            .collect()
-        ]
-        band.sort()
-        sen_val = band[k - n_lt_lo - 1]
-    else:  # sketch bracket missed (not observed; exact-count guarded)
-        allv = [r[0] for r in prc.select("slope").collect()]
-        allv.sort()
-        sen_val = allv[k - 1]
+    p = int(tot_row[0])
+    # Fewer than two order days: the pair frame is empty, so S and the
+    # median slope are NULL (the oracle's sum and rank pick over no
+    # pairs) and the sketch pass has nothing to bracket.
+    mk_s_val = int(tot_row[1]) if p else None
+    sen_val = _lower_median_slope(prc, (p + 1) // 2) if p else None
     sen = spark.range(1).select(
-        F.round(F.lit(sen_val), 4).cast("double").alias("sen_slope")
+        F.round(F.lit(sen_val).cast("double"), 4).alias("sen_slope")
     )
     ties = (
         daily.groupBy("c")
@@ -693,14 +703,16 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
             "sen_slope",
             "mk_s",
+            # try_divide: a zero variance (fewer than two days) gives
+            # NULL, as the oracle's `/` does, not a DIVIDE_BY_ZERO
             F.expr(
-                "CAST(floor("
+                "CAST(floor(try_divide("
                 " CASE WHEN mk_s > 0 THEN CAST(mk_s - 1 AS DOUBLE)"
                 "      WHEN mk_s < 0 THEN CAST(mk_s + 1 AS DOUBLE)"
-                "      ELSE 0.0 END"
-                " / sqrt((CAST(n_days AS DOUBLE) * (n_days - 1)"
+                "      ELSE 0.0 END,"
+                " sqrt((CAST(n_days AS DOUBLE) * (n_days - 1)"
                 "         * (2 * n_days + 5)"
-                "         - CAST(tie_term AS DOUBLE)) / 18.0)"
+                "         - CAST(tie_term AS DOUBLE)) / 18.0))"
                 " * 1000) AS BIGINT)"
             ).alias("mk_z_milli"),
         )

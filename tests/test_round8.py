@@ -4,6 +4,7 @@ theil-sen rank selection, kruskal-wallis decimal term."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_maybe_broadcast_hints_under_threshold(spark, sf_dir):
@@ -72,6 +73,38 @@ def test_theil_sen_rank_selection_matches_driver_sort(spark, sf_dir):
     expect = round(slopes[(len(slopes) + 1) // 2 - 1][0], 4)
     assert got.sen_slope == expect
     assert got.n_pairs == len(slopes)
+
+
+@pytest.mark.parametrize("n_days", [0, 1])
+def test_theil_sen_fewer_than_two_days_matches_oracle(
+    spark, sf_dir, tmp_path, n_days
+):
+    """With fewer than two order days the pair frame is empty: the op
+    returns the oracle's row (n_pairs 0, NULL slope and S) instead of
+    failing on the NULL sum."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bpaotu_spark.operators.timeseries2 import theil_sen_revenue_trend
+    from bpaotu_spark.registry import ORACLES, load_all
+
+    load_all()
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    day = pc.cast(orders.column("o_orderdate"), "date32")
+    orders = orders.filter(pc.equal(day, day[0])).slice(0, n_days)
+    pq.write_table(orders, tmp_path / "orders.parquet")
+
+    sdf = theil_sen_revenue_trend(spark, str(tmp_path))
+    got = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'"
+    )
+    cur = con.execute(ORACLES["theil_sen_revenue_trend"])
+    assert sdf.columns == [d[0] for d in cur.description]
+    assert got == [tuple(r) for r in cur.fetchall()]
+    assert got[0][:4] == (n_days, 0, None, None)
 
 
 def test_kruskal_wallis_term_is_exact_floor(spark, sf_dir):
