@@ -36,6 +36,7 @@ from bpaotu_spark.registry import register
 TOP_K = 5
 N_QUERIES = 10  # demo query set: vec_id < 10
 SIGN_DIMS = 4   # 2^4 = 16 buckets
+_RQ_Q = 1000  # milli quantization for the integer L2 grid
 
 _COS = (
     "list_dot_product(qv, cv)"
@@ -61,6 +62,18 @@ def _queries_and_corpus(spark: SparkSession, sf_dir: str):
         F.col("nrm").alias("nc"),
     )
     return queries, corpus
+
+
+def quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, q): each embedding on the integer milli grid,
+    floor(x·_RQ_Q) per dimension (the exact-L2² ANN convention)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda x: F.floor(x * _RQ_Q),
+        ).alias("q"),
+    )
 
 
 def _topk(scored: DataFrame) -> DataFrame:

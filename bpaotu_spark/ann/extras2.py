@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bpaotu_spark.ann.core import N_QUERIES
+from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES, quantized_embeddings
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.dedup.core import grid_d2, int_norm2
 from bpaotu_spark.operators.ordination import (
@@ -42,7 +42,6 @@ from bpaotu_spark.operators.ordination import (
 from bpaotu_spark.operators.pipeline import hash_bucket_sql
 from bpaotu_spark.registry import register
 
-_RQ_Q = 1000  # milli quantization for the integer L2 grid
 _R_SMALL, _R_MID, _R_LARGE = 1_500_000, 1_800_000, 2_100_000
 
 _PCA_ITERS = 40
@@ -80,13 +79,7 @@ def ann_range_query_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-quantized integer L2 grid (values ≤ 6e3 → per-dim square ≤
     3.6e7, 64-dim sum ≤ 2.4e9 — exact in BIGINT and in DuckDB's
     double fold)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    emb = quantized_embeddings(spark, sf_dir)
     qs = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )

@@ -36,11 +36,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from bpaotu_spark.catalog import load_table
-from bpaotu_spark.ann.core import N_QUERIES
+from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES, quantized_embeddings
 from bpaotu_spark.dedup.core import grid_d2
 from bpaotu_spark.registry import ORACLES, QUERIES, register
 
-_RQ_Q = 1000  # milli quantization (ann_range_query_count convention)
 _MQ = 100  # margin-histogram query set: vec_id < 100
 
 
@@ -92,13 +91,7 @@ def ann_top1_margin_histogram(
 ) -> DataFrame:
     """Top-2/top-1 L2² margin census over 100 queries (exact ppm on
     the milli grid; band = 10%-wide margin buckets, capped at 9)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    emb = quantized_embeddings(spark, sf_dir)
     qs = emb.filter(F.col("vec_id") < _MQ).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )
@@ -521,13 +514,7 @@ def ann_greedy_graph_search(
     dist_ratio_milli)."""
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     # build-once edge list: persisted index, not per-query construction
     knn = connected_edges_cached(spark, sf_dir)
 
@@ -692,13 +679,7 @@ ORDER BY f.query_id
 def ann_beam_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beam-12 graph-ANN walk over the CONNECTED kNN graph vs true NN
     (same report shape as ann_greedy_graph_search)."""
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
     knn = connected_edges_cached(spark, sf_dir)
@@ -904,13 +885,7 @@ def ann_hnsw_layered_search(
     search ops)."""
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     knn = connected_edges_cached(spark, sf_dir)
 
     qs = eq.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1111,13 +1086,7 @@ def ann_beam_topk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     reciprocal rank inside the returned list."""
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     knn = connected_edges_cached(spark, sf_dir)
 
     qs = eq.filter(F.col("vec_id") < N_QUERIES).select(

@@ -66,8 +66,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from bpaotu_spark.ann.core import N_QUERIES
-from bpaotu_spark.ann.extras3 import _D2_SQL, _RQ_Q
+from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES, quantized_embeddings
+from bpaotu_spark.ann.extras3 import _D2_SQL
 from bpaotu_spark.ann.graphconn import CONNECTED_EDGES_SQL
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.dedup.core import grid_d2
@@ -228,13 +228,7 @@ def ann_hnsw_multilayer_search(
     base-layer hops (measured sf0.01 9/10, sf0.1 7/10 exact-hit)."""
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     base = connected_edges_cached(spark, sf_dir).select(
         F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
     )

@@ -312,8 +312,8 @@ patched AS (
 
 
 def _tomb_search_oracle() -> str:
-    from bpaotu_spark.ann.core import N_QUERIES
-    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _D2_SQL, _RQ_Q
+    from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES
+    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _D2_SQL
 
     surv_q = (
         f"vec_id < {N_QUERIES} AND vec_id % {_VTOMB_MOD} != {_VTOMB_RES}"
@@ -404,17 +404,11 @@ def ann_tombstone_search_recall(
     brute-force nearest neighbor among survivors — the navigability
     proof of the local re-link: (query_id, found_id, found_d2,
     true_id, true_d2, exact_hit, dist_ratio_milli)."""
-    from bpaotu_spark.ann.core import N_QUERIES
-    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _RQ_Q
+    from bpaotu_spark.ann.core import N_QUERIES, quantized_embeddings
+    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS
 
     is_surv = (F.col("vec_id") % _VTOMB_MOD) != _VTOMB_RES
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     pedges = tombstoned_edges_cached(spark, sf_dir)
 
     qs = eq.filter((F.col("vec_id") < N_QUERIES) & is_surv).select(

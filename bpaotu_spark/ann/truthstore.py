@@ -46,8 +46,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from bpaotu_spark.catalog import load_table
-
 _TRUTH_K = 10  # == extras3._QUAL_K, the deepest k any consumer cuts
 
 
@@ -58,18 +56,6 @@ def _grid_d2(qcol: str, ccol: str) -> F.Column:
     from bpaotu_spark.dedup.core import grid_d2
 
     return grid_d2(F.col(qcol), F.col(ccol))
-
-
-def _eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bpaotu_spark.ann.extras3 import _RQ_Q
-
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
 
 
 def bruteforce_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,11 +78,11 @@ def grid_top10_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 per demo query over the full corpus (self excluded),
     persisted. ``trank`` breaks ties on (d2, cand_id), the subsystem's
     deterministic total order."""
-    from bpaotu_spark.ann.core import N_QUERIES
+    from bpaotu_spark.ann.core import N_QUERIES, quantized_embeddings
     from bpaotu_spark.ann.index_store import cached_frame
 
     def build() -> DataFrame:
-        eq = _eq(spark, sf_dir)
+        eq = quantized_embeddings(spark, sf_dir)
         qs = eq.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
         )
@@ -122,12 +108,12 @@ def grid_nn_surv_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbour per surviving demo query (tombstones vec_id ≡ 7 mod 50
     excluded on both sides), persisted. The post-takedown ground truth
     the patched-graph search is scored against."""
-    from bpaotu_spark.ann.core import N_QUERIES
+    from bpaotu_spark.ann.core import N_QUERIES, quantized_embeddings
     from bpaotu_spark.ann.index_store import cached_frame
     from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
 
     def build() -> DataFrame:
-        eq = _eq(spark, sf_dir)
+        eq = quantized_embeddings(spark, sf_dir)
         is_surv = (F.col("vec_id") % _VTOMB_MOD) != _VTOMB_RES
         qs = eq.filter((F.col("vec_id") < N_QUERIES) & is_surv).select(
             F.col("vec_id").alias("query_id"), F.col("q").alias("qv")

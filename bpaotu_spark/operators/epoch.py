@@ -397,8 +397,8 @@ def dedup_epoch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _epoch_search_oracle() -> str:
-    from bpaotu_spark.ann.core import N_QUERIES
-    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _D2_SQL, _RQ_Q
+    from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES
+    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _D2_SQL
     from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
 
     surv_q = (
@@ -489,19 +489,13 @@ def ann_epoch_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``conn_edges_rebuilt``) vs the persisted survivor ground truth —
     (query_id, found_id, found_d2, true_id, true_d2, exact_hit,
     dist_ratio_milli): the post-swap query path, scored."""
-    from bpaotu_spark.ann.core import N_QUERIES
-    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS, _RQ_Q
+    from bpaotu_spark.ann.core import N_QUERIES, quantized_embeddings
+    from bpaotu_spark.ann.extras3 import _BEAM, _BEAM_HOPS
     from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
     from bpaotu_spark.ann.truthstore import grid_nn_surv_cached
 
     is_surv = (F.col("vec_id") % _VTOMB_MOD) != _VTOMB_RES
-    eq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * _RQ_Q),
-        ).alias("q"),
-    )
+    eq = quantized_embeddings(spark, sf_dir)
     pedges = rebuilt_edges_cached(spark, sf_dir)
 
     qs = eq.filter((F.col("vec_id") < N_QUERIES) & is_surv).select(

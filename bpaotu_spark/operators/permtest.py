@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.operators.bpaotu import ABUNDANCE_CTE, abundance_selected
+from bpaotu_spark.operators.diststore import anosim_sel
 from bpaotu_spark.operators.ecology import _ANOSIM_SEL
 from bpaotu_spark.registry import register
 
@@ -105,17 +106,6 @@ pa AS (
   FROM pr JOIN lr USING (r)
 )
 """.strip()
-
-
-def _sel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.expr(_ANOSIM_SEL))
-        .select(
-            F.col("c_custkey").alias("sample_id"),
-            F.col("c_mktsegment").alias("grp"),
-        )
-    )
 
 
 def _dpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,7 +249,7 @@ def anosim_permutation_p(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared is the between-vs-within mean-rank difference — the
     numerator of Clarke's R (the constant M/2 cancels under every
     permutation, and each mean divides only positive rank sums)."""
-    sel = _sel(spark, sf_dir).localCheckpoint()
+    sel = anosim_sel(spark, sf_dir).localCheckpoint()
     # feeds the rank census AND the rank join — one pair former run
     dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
     dcnt = dpairs.groupBy("d_ppm").agg(F.count(F.lit(1)).alias("cnt"))
@@ -415,7 +405,7 @@ def permanova_permutation_p(
     (ss_total_ppm2, ss_within_obs_ppm2, n_perm, n_ge_obs, p_milli).
     Pseudo-F comparisons are 128-bit cross-multiplications — no
     ratio is ever formed, so integer semantics match both engines."""
-    sel = _sel(spark, sf_dir).localCheckpoint()
+    sel = anosim_sel(spark, sf_dir).localCheckpoint()
     dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
     pa = _assignments(spark, sel).localCheckpoint()
     gn = sel.groupBy("grp").agg(

@@ -319,7 +319,7 @@ def test_peaks_bounded(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ann/extras3 + audit2 + survival2
+# ann/extras3 + audit2 + survival (restricted_mean_survival)
 # ---------------------------------------------------------------------------
 
 
