@@ -32,6 +32,7 @@ from bpaotu_spark.dedup.core import (
     norm,
 )
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 TOP_K = 5
 N_QUERIES = 10  # demo query set: vec_id < 10
@@ -3111,8 +3112,8 @@ def ann_index_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "embeddings").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors")
     )
-    lay = spark.createDataFrame(
-        _index_layouts(), "layout string, bpv long, ovh long"
+    lay = local_frame(
+        spark, _index_layouts(), "layout string, bpv long, ovh long"
     )
     return (
         lay.crossJoin(F.broadcast(n))

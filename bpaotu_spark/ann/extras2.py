@@ -41,6 +41,7 @@ from bpaotu_spark.operators.ordination import (
 )
 from bpaotu_spark.operators.pipeline import hash_bucket_sql
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 _R_SMALL, _R_MID, _R_LARGE = 1_500_000, 1_800_000, 2_100_000
 
@@ -380,7 +381,7 @@ def ann_lsh_multiprobe_topk(
 ) -> DataFrame:
     """Top-k under 5-probe sign-LSH (base bucket + 4 one-bit flips)."""
     queries, corpus = _queries_and_corpus(spark, sf_dir)
-    probes = spark.createDataFrame([(p,) for p in range(SIGN_DIMS + 1)], "p int")
+    probes = local_frame(spark, [(p,) for p in range(SIGN_DIMS + 1)], "p int")
     probe_bits = []
     for i in range(SIGN_DIMS):
         base = F.when(F.col("qv")[i] >= 0, F.lit("1")).otherwise(F.lit("0"))

@@ -39,6 +39,7 @@ from bpaotu_spark.catalog import load_table
 from bpaotu_spark.ann.core import _RQ_Q, N_QUERIES, quantized_embeddings
 from bpaotu_spark.dedup.core import grid_d2
 from bpaotu_spark.registry import ORACLES, QUERIES, register
+from bpaotu_spark.session import local_frame
 
 _MQ = 100  # margin-histogram query set: vec_id < 100
 
@@ -1144,8 +1145,10 @@ def ann_beam_topk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1000 // frank if frank is not None else 0,
             )
         )
-    return spark.createDataFrame(
+    # rows are built in query_id order: the literal frame needs no sort
+    return local_frame(
+        spark,
         rows,
         "query_id long, n_hits_at10 long, recall10_e5 long,"
         " true_nn_rank_in_found long, rr_milli long",
-    ).orderBy("query_id")
+    )

@@ -37,6 +37,7 @@ from bpaotu_spark.catalog import load_table
 from bpaotu_spark.dedup.core import grid_d2
 from bpaotu_spark.ann.core import N_QUERIES
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 _DIM = 64
 _K = 16
@@ -119,7 +120,7 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()  # feeds projection AND the exact-d2 leg
     )
-    signs = spark.createDataFrame(_SIGNS, "j int, k int, s long")
+    signs = local_frame(spark, _SIGNS, "j int, k int, s long")
     x = e.select("vec_id", F.posexplode("q").alias("j", "x"))
     proj = (
         x.join(F.broadcast(signs), "j")
@@ -268,7 +269,7 @@ def ann_jl_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    signs = spark.createDataFrame(_SIGNS, "j int, k int, s long")
+    signs = local_frame(spark, _SIGNS, "j int, k int, s long")
     x = e.select("vec_id", F.posexplode("q").alias("j", "x"))
     proj = (
         x.join(F.broadcast(signs), "j")
@@ -449,7 +450,7 @@ def ann_jl_pool_recall_sweep(
         )
         .localCheckpoint()
     )
-    signs = spark.createDataFrame(_SIGNS, "j int, k int, s long")
+    signs = local_frame(spark, _SIGNS, "j int, k int, s long")
     x = e.select("vec_id", F.posexplode("q").alias("j", "x"))
     proj = (
         x.join(F.broadcast(signs), "j")

@@ -19,7 +19,15 @@ down to the scan), one for the adjacency of not-yet-seen frontier
 nodes and one for the quantized vectors of not-yet-seen candidates,
 both cached for the remainder of the invocation. The union /
 distinct / top-B merge and the exact integer scoring run in the
-driver over those bounded rows.
+driver over those bounded rows. An id set wider than ``_IN_CHUNK`` is
+fetched in chunks of that size, one collect each, so no predicate
+grows with the neighbourhood.
+
+The report leaves the driver as a literal frame
+(:func:`bpaotu_spark.session.local_frame`), planned as a
+``LocalTableScan`` and emitted in query order: executing it is one job,
+where a Python-list ``createDataFrame`` plus ``orderBy`` would plan an
+RDD scan and a range-partition sort (3 jobs for a 10-row result).
 
 Scale argument, stated carefully: the frontier was ALREADY
 round-tripping through the driver every hop (``F.broadcast(frontier)``
@@ -54,6 +62,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bpaotu_spark.session import local_frame
+
+# Ids per ``IN`` predicate: a fetch whose id set is larger runs one
+# filtered collect per chunk, so the parsed predicate stays bounded
+# however wide the touched neighbourhood grows. Today's walks (10
+# queries, beam 12) fetch at most ~600 ids at once at sf0.1: one chunk.
+_IN_CHUNK = 1024
+
 
 def collect_qv(qs: DataFrame) -> dict[int, list[int]]:
     """Collect a bounded (query_id, qv) frame into the driver map the
@@ -67,8 +83,15 @@ def d2_exact(a: list[int], b: list[int]) -> int:
     return sum((x - y) * (x - y) for x, y in zip(a, b))
 
 
-def _in_pred(col: str, ids) -> str:
-    return f"{col} IN ({','.join(str(int(i)) for i in ids)})"
+def _fetch(df: DataFrame, col: str, ids: set[int]) -> list:
+    """Rows of ``df`` whose ``col`` is in ``ids``: one pushed-down
+    ``IN`` collect per ``_IN_CHUNK`` ids, in sorted id order."""
+    ordered = sorted(ids)
+    rows = []
+    for i in range(0, len(ordered), _IN_CHUNK):
+        chunk = ",".join(str(int(x)) for x in ordered[i : i + _IN_CHUNK])
+        rows.extend(df.filter(F.expr(f"{col} IN ({chunk})")).collect())
+    return rows
 
 
 class _WalkState:
@@ -94,10 +117,8 @@ class _WalkState:
         need = nodes.difference(self.adj)
         if not need:
             return
-        rows = (
-            self.edges.filter(F.expr(_in_pred(self.src, need)))
-            .select(self.src, self.dst)
-            .collect()
+        rows = _fetch(
+            self.edges.select(self.src, self.dst), self.src, need
         )
         for n in need:
             self.adj[n] = []
@@ -108,7 +129,7 @@ class _WalkState:
         need = ids.difference(self.vec)
         if not need:
             return
-        for r in self.cq.filter(F.expr(_in_pred("cand_id", need))).collect():
+        for r in _fetch(self.cq, "cand_id", need):
             self.vec[int(r[0])] = [int(x) for x in r[1]]
 
     def candidates(
@@ -232,9 +253,10 @@ def walk_report(
 ) -> DataFrame:
     """The walker report row set, computed in the driver with the
     identical integer arithmetic (`div` on non-negative BIGINTs ==
-    Python // here) and returned as a literal frame: (query_id,
-    found_id, found_d2, true_id, true_d2, exact_hit,
-    dist_ratio_milli), ordered by query_id. A query with no truth row
+    Python // here) and returned as a literal frame
+    (:func:`~bpaotu_spark.session.local_frame`): (query_id, found_id,
+    found_d2, true_id, true_d2, exact_hit, dist_ratio_milli), emitted
+    in query_id order, so no sort runs. A query with no truth row
     has no report row (the oracles inner-join found with truth)."""
     rows = []
     for q in sorted(found.keys() & truth.keys()):
@@ -243,11 +265,12 @@ def walk_report(
         rows.append(
             (q, fid, fd2, tid, td2, fid == tid, fd2 * 1000 // max(td2, 1))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "query_id long, found_id long, found_d2 long, true_id long,"
         " true_d2 long, exact_hit boolean, dist_ratio_milli long",
-    ).orderBy("query_id")
+    )
 
 
 def collect_truth_nn(truth: DataFrame) -> dict[int, tuple[int, int]]:

@@ -51,6 +51,7 @@ from bpaotu_spark.functions.textops import (
     tokenize,
 )
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 _TOKS_CTE = f"""
 toks AS (
@@ -840,7 +841,7 @@ def stylometry_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", F.col("tok").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    words = spark.createDataFrame([(w,) for w in _SW], "w string")
+    words = local_frame(spark, [(w,) for w in _SW], "w string")
     grid = (
         tot.crossJoin(F.broadcast(words))
         .join(F.broadcast(cnt), ["source", "w"], "left")
@@ -959,7 +960,7 @@ def corpus_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     coc = c.groupBy("r").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_types")
     )
-    grid = spark.createDataFrame([(i,) for i in range(6)], "r bigint")
+    grid = local_frame(spark, [(i,) for i in range(6)], "r bigint")
     g = (
         grid.join(F.broadcast(coc), "r", "left")
         .select("r", F.coalesce("n_types", F.lit(0)).alias("n_types"))

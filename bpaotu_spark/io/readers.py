@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from bpaotu_spark.session import local_frame
+
 
 def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
     reader = spark.read.options(header=True, **options)
@@ -125,16 +127,17 @@ def read_dbapi(
         if not batches:
             # a zero-row DB-API result carries no type information —
             # surface the columns as empty nullable strings
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            empty_schema = StructType(
-                [StructField(c, StringType(), True) for c in cols]
+            return local_frame(
+                spark,
+                [],
+                ", ".join(f"`{c.replace('`', '``')}` string" for c in cols),
             )
-            return spark.createDataFrame([], schema=empty_schema)
         tbl = pa.Table.from_batches(batches, schema=schema)
     finally:
         conn.close()
-    return spark.createDataFrame(tbl.to_pandas())
+    # the Arrow table goes in as is: a pandas round trip would turn a
+    # nullable integer column into double
+    return spark.createDataFrame(tbl)
 
 
 def write_dbapi(

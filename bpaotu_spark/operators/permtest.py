@@ -18,8 +18,8 @@ the permutation null lands here as a QUERY:
   assignment).
 - The **distance matrix is permutation-invariant**, so pair distances
   (and, for ANOSIM, their tie-averaged ranks) are computed ONCE; each
-  permutation only re-labels the pairs (two broadcast joins against
-  the 33×|sel| assignment table) and re-aggregates — the exact
+  permutation only re-labels the pairs (one 33-bit label mask per
+  sample, joined to both pair ends) and re-aggregates — the exact
   textbook justification for permutation tests on distance matrices
   (Anderson 2001 §"permutation of raw data").
 - **p_milli** = 1000·(1 + #{b ≥ 1 : stat_b ≥ stat_obs}) / (B + 1) —
@@ -33,13 +33,20 @@ quantity is ever divided. ANOSIM compares the rank-mean DIFFERENCE
 after), and PERMANOVA compares pseudo-F via 128-bit
 cross-multiplication, never forming the ratio.
 
-Scale shape: identical to anosim_groups/permanova_pseudo_f — one
-abundance scan, otu-keyed shared join, bounded broadcast pair former
-— plus a 33× fan-out through two broadcast joins into one map-side
-combined groupBy(b). Nothing driver-side; B is a constant.
+Scale shape: the stored pair matrix (diststore) is read once, joined
+to the broadcast label masks and reduced to ONE row of 33 per-b
+conditional sums; the integer finish (per-b statistic, n_ge_obs,
+p_milli) runs in the driver over that row and the result leaves as a
+one-row literal frame. Driver-side bound: the collected study
+selection, one (sample_id, grp) row per selected sample — the rows
+the former Spark assignment table already broadcast to every
+executor — and 33 mask bits per sample. B is a constant.
 """
 
 from __future__ import annotations
+
+import hashlib
+from collections import Counter
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -49,6 +56,7 @@ from bpaotu_spark.operators.bpaotu import ABUNDANCE_CTE, abundance_selected
 from bpaotu_spark.operators.diststore import anosim_sel
 from bpaotu_spark.operators.ecology import _ANOSIM_SEL
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 _B_PERM = 32
 
@@ -123,44 +131,6 @@ def _dpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assignments(spark: SparkSession, sel: DataFrame) -> DataFrame:
-    """(b, sample_id, grp) for b = 0 (observed) .. B (md5 draws)."""
-    perms = spark.range(1, _B_PERM + 1).select(
-        F.col("id").cast("int").alias("b")
-    )
-    ph = sel.crossJoin(F.broadcast(perms)).select(
-        "b",
-        "sample_id",
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.col("sample_id").cast("string"),
-                F.col("b").cast("string"),
-            )
-        ).alias("h"),
-    )
-    wpr = Window.partitionBy("b").orderBy("h", "sample_id")
-    pr = ph.select(
-        "b", "sample_id", F.row_number().over(wpr).alias("r")
-    )
-    # unpartitioned window over the BOUNDED study selection (same
-    # bound as the pair former itself) — never over a fact table
-    wlr = Window.orderBy("grp", "sample_id")
-    lr = sel.select("grp", F.row_number().over(wlr).alias("r"))
-    return (
-        sel.select(
-            F.lit(0).cast("bigint").alias("b"), "sample_id", "grp"
-        )
-        .unionByName(
-            pr.join(lr, "r").select(
-                F.col("b").cast("bigint").alias("b"),
-                "sample_id",
-                "grp",
-            )
-        )
-    )
-
-
 # The study selection pins exactly two candidate labels
 # (ecology._ANOSIM_SEL: c_mktsegment IN ('BUILDING', 'MACHINERY')), so
 # a sample's group under every assignment b = 0..B packs into one
@@ -173,18 +143,52 @@ def _assignments(spark: SparkSession, sel: DataFrame) -> DataFrame:
 # shuffle/scan a lightweight proxy once, never multiply the pair
 # stream). The oracle keeps the explicit per-b join form — same values.
 _MASK_GRP = "MACHINERY"
+_LABELS = ("BUILDING", _MASK_GRP)
 
 
-def _perm_masks(pa: DataFrame) -> DataFrame:
-    """(sample_id, mask): bit b of mask = [assignment b -> MACHINERY]."""
-    return pa.groupBy("sample_id").agg(
-        F.sum(
-            F.when(
-                F.col("grp") == _MASK_GRP,
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(b AS INT))"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        ).alias("mask")
+def _perm_masks(sel: list[tuple[int, str]]) -> dict[int, int]:
+    """sample_id -> mask over the collected (sample_id, grp) selection:
+    bit b = [assignment b maps the sample to 'MACHINERY']. b = 0 is the
+    observed label; draw b >= 1 ranks the samples by
+    (md5('<sample_id>:<b>'), sample_id) and hands them the labels
+    ranked by (grp, sample_id) — the oracle's ``_PERM_CTES`` draw."""
+    extra = sorted({g for _, g in sel} - set(_LABELS))
+    if extra:
+        raise ValueError(
+            f"permutation masks encode the labels {_LABELS}; the"
+            f" selection also holds {extra}"
+        )
+    labels = [g for g, _ in sorted((g, s) for s, g in sel)]
+    masks = {s: int(g == _MASK_GRP) for s, g in sel}
+    for b in range(1, _B_PERM + 1):
+        drawn = sorted(
+            (hashlib.md5(f"{s}:{b}".encode()).hexdigest(), s) for s in masks
+        )
+        for (_, s), g in zip(drawn, labels):
+            if g == _MASK_GRP:
+                masks[s] |= 1 << b
+    return masks
+
+
+def _masked_pairs(
+    spark: SparkSession, pairs: DataFrame, masks: dict[int, int]
+) -> DataFrame:
+    """``pairs`` plus (mask_a, mask_b): the masks enter as one
+    broadcast literal frame joined to both pair ends."""
+    m = local_frame(spark, sorted(masks.items()), "sample_id long, mask long")
+    ma = m.select(F.col("sample_id").alias("sa"), F.col("mask").alias("mask_a"))
+    mb = m.select(F.col("sample_id").alias("sb"), F.col("mask").alias("mask_b"))
+    return pairs.join(F.broadcast(ma), pairs.sample_a == F.col("sa")).join(
+        F.broadcast(mb), pairs.sample_b == F.col("sb")
     )
+
+
+def _collect_sel(spark: SparkSession, sf_dir: str) -> list[tuple[int, str]]:
+    return [(int(r[0]), r[1]) for r in anosim_sel(spark, sf_dir).collect()]
+
+
+def _p_milli(n_ge_obs: int) -> int:
+    return (n_ge_obs + 1) * 1000 // (_B_PERM + 1)
 
 
 @register(
@@ -249,8 +253,7 @@ def anosim_permutation_p(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared is the between-vs-within mean-rank difference — the
     numerator of Clarke's R (the constant M/2 cancels under every
     permutation, and each mean divides only positive rank sums)."""
-    sel = anosim_sel(spark, sf_dir).localCheckpoint()
-    # feeds the rank census AND the rank join — one pair former run
+    masks = _perm_masks(_collect_sel(spark, sf_dir))
     dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
     dcnt = dpairs.groupBy("d_ppm").agg(F.count(F.lit(1)).alias("cnt"))
     wv = Window.orderBy("d_ppm").rowsBetween(
@@ -270,20 +273,9 @@ def anosim_permutation_p(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_rank_milli"
         ),
     )
-    pa = _assignments(spark, sel).localCheckpoint()
-    # bitmask collapse (see _perm_masks): one pass over the stored
-    # pair table computes every permutation's within/between rank
-    # sums as conditional-sum columns — no (B+1)x pair fan-out
-    pm = _perm_masks(pa)
-    ma = pm.select(F.col("sample_id").alias("sa"), F.col("mask").alias("mask_a"))
-    mb = pm.select(F.col("sample_id").alias("sb"), F.col("mask").alias("mask_b"))
-    px = (
-        rp.join(F.broadcast(ma), rp.sample_a == F.col("sa"))
-        .join(F.broadcast(mb), rp.sample_b == F.col("sb"))
-        .select(
-            "avg_rank_milli",
-            F.expr("CAST(mask_a ^ mask_b AS BIGINT)").alias("x"),
-        )
+    px = _masked_pairs(spark, rp, masks).select(
+        "avg_rank_milli",
+        F.expr("CAST(mask_a ^ mask_b AS BIGINT)").alias("x"),
     )
     aggs = [
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -305,50 +297,26 @@ def anosim_permutation_p(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias(f"sw_{b}")
         )
-    wide = px.agg(*aggs)
-    stack = ", ".join(
-        f"CAST({b} AS BIGINT), nw_{b}, sw_{b}" for b in range(_B_PERM + 1)
-    )
-    rb = wide.select(
-        F.expr(
-            f"stack({_B_PERM + 1}, {stack})"
-            " AS (b, n_within, sum_rank_w)"
-        ),
-        "n_pairs",
-        "sum_rank_all",
-    )
-    # sum_rank_b = sum_rank_all - sum_rank_w exactly (integer ranks)
-    rd = rb.select(
-        "b",
-        F.expr(
-            "((sum_rank_all - sum_rank_w) * 1000)"
-            " div greatest(n_pairs - n_within, 1)"
-            " - (sum_rank_w * 1000) div greatest(n_within, 1)"
-        ).alias("diff_micro"),
-    ).localCheckpoint()
-    obs = rd.filter("b = 0").select(
-        F.col("diff_micro").alias("obs_diff")
-    )
-    ge = (
-        rd.filter("b > 0")
-        .crossJoin(F.broadcast(obs))
-        .agg(
-            F.sum(
-                F.expr(
-                    "CASE WHEN diff_micro >= obs_diff THEN 1 ELSE 0 END"
-                )
+    row = px.agg(*aggs).collect()[0]
+    # integer finish in the driver (all operands non-negative, so //
+    # is Spark's div); with no pair the oracle has no per-b row at all
+    obs, n_ge = None, 0
+    n_pairs = row["n_pairs"]
+    if n_pairs:
+        diff = []
+        for b in range(_B_PERM + 1):
+            nw, sw = row[f"nw_{b}"], row[f"sw_{b}"]
+            diff.append(
+                (row["sum_rank_all"] - sw) * 1000 // max(n_pairs - nw, 1)
+                - sw * 1000 // max(nw, 1)
             )
-            .cast("bigint")
-            .alias("n_ge_obs")
-        )
-    )
-    return ge.crossJoin(F.broadcast(obs)).select(
-        F.col("obs_diff").cast("bigint").alias("obs_rank_diff_micro"),
-        F.lit(_B_PERM).cast("bigint").alias("n_perm"),
-        "n_ge_obs",
-        F.expr(
-            f"CAST((n_ge_obs + 1) * 1000 div ({_B_PERM} + 1) AS BIGINT)"
-        ).alias("p_milli"),
+        obs = diff[0]
+        n_ge = sum(d >= obs for d in diff[1:])
+    return local_frame(
+        spark,
+        [(obs, _B_PERM, n_ge, _p_milli(n_ge))],
+        "obs_rank_diff_micro long, n_perm long, n_ge_obs long,"
+        " p_milli long",
     )
 
 
@@ -403,122 +371,63 @@ def permanova_permutation_p(
 ) -> DataFrame:
     """PERMANOVA permutation test (B=32 md5 label draws): one row
     (ss_total_ppm2, ss_within_obs_ppm2, n_perm, n_ge_obs, p_milli).
-    Pseudo-F comparisons are 128-bit cross-multiplications — no
+    Pseudo-F comparisons are exact integer cross-multiplications — no
     ratio is ever formed, so integer semantics match both engines."""
-    sel = anosim_sel(spark, sf_dir).localCheckpoint()
+    sel = _collect_sel(spark, sf_dir)
+    masks = _perm_masks(sel)
     dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
-    pa = _assignments(spark, sel).localCheckpoint()
-    gn = sel.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_g")
-    )
-    nn = sel.agg(F.count(F.lit(1)).cast("bigint").alias("n_samples"))
-    sst = (
-        dpairs.select(
-            (F.col("d_ppm").cast("decimal(38,0)") * F.col("d_ppm")).alias(
-                "d2"
-            )
-        )
-        .agg(F.sum("d2").alias("s2_all"))
-        .crossJoin(F.broadcast(nn))
-        .select(
-            F.expr("CAST(s2_all div n_samples AS BIGINT)").alias("ss_t")
-        )
-    )
     # bitmask collapse (see _perm_masks): a pair is within-'MACHINERY'
     # under b iff bit b is set in BOTH masks, within the other group
     # iff clear in both — so every permutation's per-group d² sums are
     # conditional-sum columns of ONE pass over the stored pair table
-    # (the oracle keeps the explicit per-b join form — same values)
-    pm = _perm_masks(pa)
-    ma = pm.select(F.col("sample_id").alias("sa"), F.col("mask").alias("mask_a"))
-    mb = pm.select(F.col("sample_id").alias("sb"), F.col("mask").alias("mask_b"))
-    px = (
-        dpairs.join(F.broadcast(ma), dpairs.sample_a == F.col("sa"))
-        .join(F.broadcast(mb), dpairs.sample_b == F.col("sb"))
-        .select(
-            (F.col("d_ppm").cast("decimal(38,0)") * F.col("d_ppm")).alias(
-                "d2"
-            ),
-            F.expr("CAST(mask_a & mask_b AS BIGINT)").alias("both"),
-            F.expr(
-                "CAST(~mask_a & ~mask_b AS BIGINT)"
-            ).alias("neither"),
-        )
+    # (the oracle keeps the explicit per-b join form — same values).
+    # No ELSE: a sum over no within-group pair is NULL, the oracle's
+    # missing (b, grp) row.
+    px = _masked_pairs(spark, dpairs, masks).select(
+        (F.col("d_ppm").cast("decimal(38,0)") * F.col("d_ppm")).alias("d2"),
+        F.expr("CAST(mask_a & mask_b AS BIGINT)").alias("both"),
+        F.expr("CAST(~mask_a & ~mask_b AS BIGINT)").alias("neither"),
     )
-    aggs = []
+    aggs = [F.sum("d2").alias("s2_all")]
     for b in range(_B_PERM + 1):
-        aggs.append(
-            F.sum(
-                F.expr(
-                    f"CASE WHEN (shiftright(both, {b}) & 1) = 1"
-                    " THEN d2 ELSE CAST(0 AS DECIMAL(38,0)) END"
-                )
-            ).alias(f"s_hi_{b}")
-        )
-        aggs.append(
-            F.sum(
-                F.expr(
-                    f"CASE WHEN (shiftright(neither, {b}) & 1) = 1"
-                    " THEN d2 ELSE CAST(0 AS DECIMAL(38,0)) END"
-                )
-            ).alias(f"s_lo_{b}")
-        )
-    wide = px.agg(*aggs)
-    stack = ", ".join(
-        f"CAST({b} AS BIGINT), s_hi_{b}, s_lo_{b}"
-        for b in range(_B_PERM + 1)
-    )
-    sb = wide.select(
-        F.expr(f"stack({_B_PERM + 1}, {stack}) AS (b, s_hi, s_lo)")
-    )
-    # group sizes are permutation-invariant (the draw rank-matches the
-    # observed label multiset): n_g per label is a constant across b
-    gnw = gn.groupBy().pivot("grp", [_MASK_GRP, "BUILDING"]).agg(
-        F.first("n_g")
-    )
-    ssw = (
-        sb.crossJoin(F.broadcast(gnw))
-        .select(
-            "b",
-            F.expr(
-                f"CAST(coalesce(s_hi div nullif(`{_MASK_GRP}`, 0),"
-                " CAST(0 AS DECIMAL(38,0))) AS BIGINT)"
-                " + CAST(coalesce(s_lo div nullif(`BUILDING`, 0),"
-                " CAST(0 AS DECIMAL(38,0))) AS BIGINT)"
-            ).alias("ss_w"),
-        )
-        .localCheckpoint()
-    )
-    obs = ssw.filter("b = 0").select(F.col("ss_w").alias("ss_w_obs"))
-    ge = (
-        ssw.filter("b > 0")
-        .crossJoin(F.broadcast(obs))
-        .crossJoin(F.broadcast(sst))
-        .agg(
-            F.sum(
-                F.expr(
-                    "CASE WHEN CAST(ss_t - ss_w AS DECIMAL(38,0))"
-                    " * ss_w_obs >= CAST(ss_t - ss_w_obs"
-                    " AS DECIMAL(38,0)) * ss_w THEN 1 ELSE 0 END"
-                )
+        for name, bits in (("s_hi", "both"), ("s_lo", "neither")):
+            aggs.append(
+                F.sum(
+                    F.expr(
+                        f"CASE WHEN (shiftright({bits}, {b}) & 1) = 1"
+                        " THEN d2 END"
+                    )
+                ).alias(f"{name}_{b}")
             )
-            .cast("bigint")
-            .alias("n_ge_obs")
+    row = px.agg(*aggs).collect()[0]
+    # integer finish in the driver. Group sizes are permutation-
+    # invariant (each draw rank-matches the observed label multiset).
+    n_g = Counter(g for _, g in sel)
+    ss_t = None if row["s2_all"] is None else int(row["s2_all"]) // len(sel)
+    ss_w = {}
+    for b in range(_B_PERM + 1):
+        parts = [
+            int(row[f"{name}_{b}"]) // n_g[g]
+            for name, g in (("s_hi", _MASK_GRP), ("s_lo", "BUILDING"))
+            if row[f"{name}_{b}"] is not None
+        ]
+        if parts:  # both per-group sums NULL: the oracle has no row
+            ss_w[b] = sum(parts)
+    obs = ss_w.get(0)
+    # F_b >= F_obs iff (ss_t - ss_w_b)*ss_w_obs >= (ss_t - ss_w_obs)*ss_w_b
+    # (denominators positive, the d.o.f. constants cancel)
+    n_ge = 0
+    if obs is not None:
+        n_ge = sum(
+            (ss_t - w) * obs >= (ss_t - obs) * w
+            for b, w in ss_w.items()
+            if b > 0
         )
-    )
-    return (
-        ge.crossJoin(F.broadcast(sst))
-        .crossJoin(F.broadcast(obs))
-        .select(
-            F.col("ss_t").alias("ss_total_ppm2"),
-            F.col("ss_w_obs").alias("ss_within_obs_ppm2"),
-            F.lit(_B_PERM).cast("bigint").alias("n_perm"),
-            "n_ge_obs",
-            F.expr(
-                f"CAST((n_ge_obs + 1) * 1000 div ({_B_PERM} + 1)"
-                " AS BIGINT)"
-            ).alias("p_milli"),
-        )
+    return local_frame(
+        spark,
+        [(ss_t, obs, _B_PERM, n_ge, _p_milli(n_ge))],
+        "ss_total_ppm2 long, ss_within_obs_ppm2 long, n_perm long,"
+        " n_ge_obs long, p_milli long",
     )
 
 

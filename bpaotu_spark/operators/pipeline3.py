@@ -27,6 +27,7 @@ from bpaotu_spark.functions.textops import (
     tokenize,
 )
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # corpus_anneal_mixture — two-phase (pretrain → anneal) token budget
@@ -522,8 +523,8 @@ def pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokenize(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     run = packed_token_offsets(t, ["lang"]).localCheckpoint()
-    grid = spark.createDataFrame(
-        [(b,) for b in _SWEEP_BUDGETS], "budget bigint"
+    grid = local_frame(
+        spark, [(b,) for b in _SWEEP_BUDGETS], "budget bigint"
     )
     docs = (
         run.crossJoin(F.broadcast(grid))

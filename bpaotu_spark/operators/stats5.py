@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 _DAILY_CTE = """
 daily AS (
@@ -100,7 +101,7 @@ def daily_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(dev_milli AS DECIMAL(38,0)) * dev_milli")
         ).alias("ss0")
     )
-    lags = spark.createDataFrame([(x,) for x in _ACF_LAGS], "lag bigint")
+    lags = local_frame(spark, [(x,) for x in _ACF_LAGS], "lag bigint")
     a = dev.select("d", F.col("dev_milli").alias("da"))
     b = dev.select(
         F.col("d").alias("d_b"), F.col("dev_milli").alias("db")
@@ -369,7 +370,7 @@ def quantiles_exact_by_segment(
         F.row_number().over(wr).alias("rn"),
         F.count(F.lit(1)).over(wn).alias("n"),
     )
-    qs = spark.createDataFrame([(q,) for q in _Q_LEVELS], "q bigint")
+    qs = local_frame(spark, [(q,) for q in _Q_LEVELS], "q bigint")
     return (
         r.join(F.broadcast(qs), F.expr("rn = (n * q) div 100 + 1"))
         .groupBy("seg", "q")

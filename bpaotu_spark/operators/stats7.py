@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.operators.stats6 import _KAPPA_LEN, _KAPPA_PCT
 from bpaotu_spark.registry import register
+from bpaotu_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # mcnemar_quality_raters — McNemar's test on the paired 2×2 of the two
@@ -215,8 +216,8 @@ def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ss0"
         )
     )
-    lags = spark.createDataFrame(
-        [(x,) for x in range(1, _LB_MAX_LAG + 1)], "lag bigint"
+    lags = local_frame(
+        spark, [(x,) for x in range(1, _LB_MAX_LAG + 1)], "lag bigint"
     )
     a = dev.select("d", F.col("dev_milli").alias("da"))
     b = dev.select(F.col("d").alias("d_b"), F.col("dev_milli").alias("db"))
@@ -650,8 +651,8 @@ def ljung_box_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ss0"
         )
     )
-    lags = spark.createDataFrame(
-        [(x,) for x in range(1, _LB_MAX_LAG + 1)], "lag bigint"
+    lags = local_frame(
+        spark, [(x,) for x in range(1, _LB_MAX_LAG + 1)], "lag bigint"
     )
     a = dev.select("d", F.col("dev_milli").alias("da"))
     b = dev.select(F.col("d").alias("d_b"), F.col("dev_milli").alias("db"))
@@ -844,11 +845,11 @@ def daily_revenue_periodogram(
             "energy"
         )
     )
-    periods = spark.createDataFrame(
-        [(p,) for p in _PGRAM_PERIODS], "p bigint"
+    periods = local_frame(
+        spark, [(p,) for p in _PGRAM_PERIODS], "p bigint"
     )
-    trig = spark.createDataFrame(
-        _PGRAM_TRIG, "p bigint, r bigint, cosq bigint, sinq bigint"
+    trig = local_frame(
+        spark, _PGRAM_TRIG, "p bigint, r bigint, cosq bigint, sinq bigint"
     )
     proj = (
         dev.crossJoin(F.broadcast(periods))

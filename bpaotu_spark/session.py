@@ -11,13 +11,44 @@ single module:
 - Session timezone pinned UTC so timestamp → epoch conversions agree
   with the DuckDB oracle and with any other engine reading the same
   parquet.
+
+It also owns :func:`local_frame`, the one way bounded driver-held rows
+enter Spark.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str
+) -> DataFrame:
+    """Bounded driver-held ``rows`` as a DataFrame of schema ``ddl``.
+
+    The rows go in as one Arrow table, which Spark plans as a
+    ``LocalTableScan``: executing it runs at most one job and keeps
+    the row order. ``createDataFrame`` on a Python list plans a
+    ``Scan ExistingRDD`` instead, and a trailing ``orderBy`` adds a
+    range-partition exchange: executing a 10-row result took 3 jobs
+    and 0.27-0.71 s that way against 1 job and 0.034 s here (local[4]).
+    Needs no Arrow conf, so it works on any session.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def _local_dir() -> str:

@@ -273,6 +273,19 @@ def test_read_dbapi_sqlite_roundtrip(spark, tmp_path):
     assert back.count() == 10
     assert {r.name for r in back.collect()} == {f"otu_{i}" for i in range(10)}
 
+    # a nullable INTEGER column stays bigint with its NULL (a pandas
+    # round trip would give 10.0, None, 30.0 as double)
+    conn = sqlite3.connect(db)
+    conn.execute("CREATE TABLE gaps (k INTEGER, v INTEGER)")
+    conn.executemany(
+        "INSERT INTO gaps VALUES (?, ?)", [(1, 10), (2, None), (3, 30)]
+    )
+    conn.commit()
+    conn.close()
+    gaps = read_dbapi(spark, connect, "SELECT * FROM gaps ORDER BY k")
+    assert dict(gaps.dtypes)["v"] == "bigint"
+    assert [r.v for r in gaps.collect()] == [10, None, 30]
+
 
 def test_read_dbapi_empty_result(spark, tmp_path):
     import sqlite3

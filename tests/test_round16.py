@@ -62,6 +62,45 @@ def test_beam_walk_hop_budget_is_a_fixed_point(spark, sf_dir):
     assert f8 == f28
 
 
+def test_walks_identical_with_chunked_in_lists(spark, sf_dir, monkeypatch):
+    """Splitting the fetch id sets into 2-id ``IN`` chunks changes
+    nothing: beam and greedy frontiers equal the one-chunk walks."""
+    from bpaotu_spark.ann import walk
+    from bpaotu_spark.ann.index_store import connected_edges_cached
+
+    eq = _eq(spark, sf_dir)
+    knn = connected_edges_cached(spark, sf_dir)
+    qs = eq.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
+    )
+    cq = eq.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
+    qmap = walk.collect_qv(qs)
+    eid, ed2 = walk.entry_init(eq, qmap)
+
+    def both():
+        beam = walk.beam_walk(
+            spark, knn, cq, qmap, {q: [(ed2[q], eid)] for q in qmap},
+            beam=6, hops=3,
+        )
+        greedy = walk.greedy_walk(
+            spark, knn, cq, qmap, {q: (eid, ed2[q]) for q in qmap}, hops=3
+        )
+        return beam, greedy
+
+    whole = both()
+    n_in = {"n": 0}
+    real_fetch = walk._fetch
+
+    def counting(df, col, ids):
+        n_in["n"] += -(-len(ids) // walk._IN_CHUNK)
+        return real_fetch(df, col, ids)
+
+    monkeypatch.setattr(walk, "_IN_CHUNK", 2)
+    monkeypatch.setattr(walk, "_fetch", counting)
+    assert both() == whole
+    assert n_in["n"] > 4  # the id sets really were split
+
+
 def test_greedy_tie_keeps_current_node(spark):
     """Greedy moves ONLY on a strict d2 improvement: a candidate at
     the same d2 with a smaller id must not displace cur (the original

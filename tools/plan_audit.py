@@ -62,11 +62,8 @@ ALLOWED_BNLJ = {
     "ljung_box_daily": "broadcast 7-row lag dimension into the DAILY frame + 1-row mean/SS/n scalars (daily_acf_lags shape)",
     "quality_threshold_calibration": "broadcast 1-row global-threshold scalar into the doc scan",
     "cluster_balanced_sample_plan": "store-served km_assign read (late-r15); broadcast K-row quota table + 1-row budget scalar",
-    "ann_beam_topk_quality": "broadcast |queries|*B-row frontier per hop + truth leg's broadcast-query != join (beam shape)",
     "ann_hnsw_multilayer_search": "broadcast query set into the n/16 routing-layer scan (non-equi !=) + |queries|*B-row frontier per descent hop + truth leg (beam shape)",
     "ann_jl_pool_recall_sweep": "broadcast query set (N_QUERIES rows), non-equi != + projected-pair equi join (jl_topk_recall shape, per pool leg)",
-    "anosim_permutation_p": "bounded study-selection pair former (anosim_groups shape) + broadcast 33x|sel| assignment table + 1-row obs scalar",
-    "permanova_permutation_p": "bounded study-selection pair former (permanova shape) + broadcast 33x|sel| assignment table + 1-row ss_t/obs scalars",
     # --- round-10 additions ---
     "knn_graph_connected": "broadcast 1-row global-min-rep + two 1-row component-count scalars into the 3-row census",
     "expectations_audit_delta": "broadcast 1-row max-year scalar scoping the delta + 1-row orphan-count scalars (audit shape)",
