@@ -578,22 +578,32 @@ _D2_SQL = (
 )
 
 
-def _beam_oracle() -> str:
+# why each hop's dedup is an explicit DISTINCT (kept in the
+# ann_beam_graph_search oracle's text)
+_HOP_NOTE = """
+  -- DISTINCT via subquery: under WITH RECURSIVE DuckDB applies
+  -- UNION-ALL semantics to a non-self-referential CTE's top-level
+  -- UNION, so the dedup must be explicit"""
+
+
+def beam_hops_sql(edges: str, note: str = "") -> tuple[str, str]:
+    """The unrolled beam hops over the edge CTE ``edges`` (vec_id,
+    neighbor_id), from the frontier CTE ``f0``: hop ``k`` unions the
+    frontier with its out-neighbours (``exp{k}``) and keeps the best
+    ``_BEAM`` by (d2, node_id) (``f{k}``). Returns the CTE list and the
+    name of the last frontier."""
     hops = []
     prev = "f0"
     for k in range(1, _BEAM_HOPS + 1):
         hops.append(f"""
-exp{k} AS MATERIALIZED (
-  -- DISTINCT via subquery: under WITH RECURSIVE DuckDB applies
-  -- UNION-ALL semantics to a non-self-referential CTE's top-level
-  -- UNION, so the dedup must be explicit
+exp{k} AS MATERIALIZED ({note}
   SELECT DISTINCT query_id, node_id, d2 FROM (
     SELECT query_id, node_id, d2 FROM {prev}
     UNION ALL
     SELECT f.query_id, e.neighbor_id AS node_id,
       {_D2_SQL.format(a="q.q", b="c.q")} AS d2
     FROM {prev} f
-    JOIN knn e ON e.vec_id = f.node_id AND e.neighbor_id != f.query_id
+    JOIN {edges} e ON e.vec_id = f.node_id AND e.neighbor_id != f.query_id
     JOIN eq q ON q.vec_id = f.query_id
     JOIN eq c ON c.vec_id = e.neighbor_id
   )
@@ -607,6 +617,11 @@ f{k} AS MATERIALIZED (
   ) WHERE rn <= {_BEAM}
 )""".strip())
         prev = f"f{k}"
+    return ",".join(hops), prev
+
+
+def _beam_oracle() -> str:
+    hops, prev = beam_hops_sql("knn", _HOP_NOTE)
     from bpaotu_spark.ann.graphconn import CONNECTED_EDGES_SQL
 
     return f"""
@@ -627,7 +642,7 @@ f0 AS MATERIALIZED (
   CROSS JOIN entry
   JOIN eq e ON e.vec_id = entry.eid
 ),
-{",".join(hops)},
+{hops},
 found AS (
   SELECT query_id, node_id AS found_id, d2 AS found_d2 FROM (
     SELECT query_id, node_id, d2,
@@ -938,31 +953,7 @@ _QUAL_K = 10
 
 
 def _beam_quality_oracle() -> str:
-    hops = []
-    prev = "f0"
-    for k in range(1, _BEAM_HOPS + 1):
-        hops.append(f"""
-exp{k} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node_id, d2 FROM (
-    SELECT query_id, node_id, d2 FROM {prev}
-    UNION ALL
-    SELECT f.query_id, e.neighbor_id AS node_id,
-      {_D2_SQL.format(a="q.q", b="c.q")} AS d2
-    FROM {prev} f
-    JOIN knn e ON e.vec_id = f.node_id AND e.neighbor_id != f.query_id
-    JOIN eq q ON q.vec_id = f.query_id
-    JOIN eq c ON c.vec_id = e.neighbor_id
-  )
-),
-f{k} AS MATERIALIZED (
-  SELECT query_id, node_id, d2 FROM (
-    SELECT query_id, node_id, d2,
-      row_number() OVER (PARTITION BY query_id ORDER BY d2, node_id)
-        AS rn
-    FROM exp{k}
-  ) WHERE rn <= {_BEAM}
-)""".strip())
-        prev = f"f{k}"
+    hops, prev = beam_hops_sql("knn")
     from bpaotu_spark.ann.graphconn import CONNECTED_EDGES_SQL
 
     return f"""
@@ -983,7 +974,7 @@ f0 AS MATERIALIZED (
   CROSS JOIN entry
   JOIN eq e ON e.vec_id = entry.eid
 ),
-{",".join(hops)},
+{hops},
 found AS (
   SELECT query_id, node_id,
     row_number() OVER (PARTITION BY query_id ORDER BY d2, node_id)

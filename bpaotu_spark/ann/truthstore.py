@@ -33,7 +33,7 @@ driver verifies the store-served values each round):
 * ``truth_grid_nn_surv`` — (query_id, true_id, true_d2): the exact
   survivor-only nearest neighbour per surviving query (the
   post-takedown truth ``ann_tombstone_search_recall`` scores
-  against; tombstone convention vec_id ≡ 7 mod 50).
+  against; takedown set ``dedup.lifecycle.DEAD_VECS``).
 
 Scale shape: each build is one broadcast of the bounded query set
 against the corpus scan followed by a per-query window top-k —
@@ -107,16 +107,16 @@ def grid_top10_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def grid_nn_surv_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, true_id, true_d2) — the exact nearest SURVIVING
-    neighbour per surviving demo query (tombstones vec_id ≡ 7 mod 50
+    neighbour per surviving demo query (the vector takedown set
     excluded on both sides), persisted. The post-takedown ground truth
     the patched-graph search is scored against."""
     from bpaotu_spark.ann.core import N_QUERIES, quantized_embeddings
     from bpaotu_spark.ann.index_store import cached_frame
-    from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
+    from bpaotu_spark.dedup.lifecycle import DEAD_VECS
 
     def build() -> DataFrame:
         eq = quantized_embeddings(spark, sf_dir)
-        is_surv = (F.col("vec_id") % _VTOMB_MOD) != _VTOMB_RES
+        is_surv = DEAD_VECS.spark(member=False)
         qs = eq.filter((F.col("vec_id") < N_QUERIES) & is_surv).select(
             F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
         )

@@ -27,6 +27,8 @@ store-served values each round):
   LSH band table (the incremental/tombstone base since r12/r13; the
   batch consumers now read it too).
 * ``simhash_sig_all``     — (doc_id, simhash): full-corpus SimHash.
+* ``emb_lsh_all``         — (vec_id, bucket): full-corpus sign-LSH
+  bucket membership.
 * ``dedup_lsh_pairs``     — (doc_a, doc_b, n_shared_bands): the
   bucket-capped MinHash candidate pair table.
 * ``dedup_simhash_pairs`` — (doc_a, doc_b, hamming): the banded
@@ -117,6 +119,27 @@ def full_simhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simhash_sig_all",
         lambda: simhash_signatures(_docs(spark, sf_dir)),
         table=_DOCS,
+    )
+
+
+def full_emb_bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, bucket) over the FULL corpus — the standing sign-LSH
+    membership rows, persisted (read by the vector takedown pass and
+    the debt census)."""
+    from bpaotu_spark.ann.index_store import cached_frame
+    from bpaotu_spark.dedup.core import _emb_bucket
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("v"),
+        )
+        return emb.select(
+            "vec_id", _emb_bucket(F.col("v")).alias("bucket")
+        )
+
+    return cached_frame(
+        spark, sf_dir, "emb_lsh_all", build, table="embeddings"
     )
 
 

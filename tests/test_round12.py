@@ -211,7 +211,9 @@ def test_incremental_dedup_equals_from_scratch(
     on the unioned corpus restricted to pairs involving a new doc —
     same pairs, same n_shared_bands."""
     from bpaotu_spark.ann import index_store
-    from bpaotu_spark.dedup.incremental import _NEW_MOD
+    from bpaotu_spark.dedup.lifecycle import DROP
+
+    _NEW_MOD = DROP.mod
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -235,7 +237,7 @@ def test_incremental_dedup_index_persists_and_reserves(
     served from the store (zero base signature recomputes)."""
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.dedup import core as dedup_core
-    from bpaotu_spark.dedup import incremental
+    from bpaotu_spark.dedup import lifecycle as incremental
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()

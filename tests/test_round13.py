@@ -201,10 +201,9 @@ def test_incremental_simhash_equals_batch_restriction(
     to pairs involving a new (doc_id % 8 == 0) doc."""
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.dedup.core import dedup_simhash
-    from bpaotu_spark.dedup.incremental import (
-        _NEW_MOD,
-        dedup_incremental_simhash,
-    )
+    from bpaotu_spark.dedup.lifecycle import DROP, dedup_incremental_simhash
+
+    _NEW_MOD = DROP.mod
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -228,10 +227,9 @@ def test_incremental_embedding_equals_batch_restriction(
 ):
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.dedup.core import dedup_embedding_lsh
-    from bpaotu_spark.dedup.incremental import (
-        _NEW_MOD,
-        dedup_incremental_embedding,
-    )
+    from bpaotu_spark.dedup.lifecycle import DROP, dedup_incremental_embedding
+
+    _NEW_MOD = DROP.mod
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -257,11 +255,9 @@ def test_tombstone_minhash_states_consistent(
     the status state machine agree; m_after counts survivors only."""
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.dedup.core import LSH_BUCKET_CAP, minhash_bands
-    from bpaotu_spark.dedup.tombstone import (
-        _TOMB_MOD,
-        _TOMB_RES,
-        dedup_tombstone_minhash,
-    )
+    from bpaotu_spark.dedup.lifecycle import DEAD_DOCS, dedup_tombstone_minhash
+
+    _, _TOMB_MOD, _TOMB_RES = DEAD_DOCS
     from bpaotu_spark.catalog import load_table
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
@@ -304,13 +300,14 @@ def test_ann_tombstone_patched_graph_invariants(
     repair edges are present in both directions, and every repair
     target survives."""
     from bpaotu_spark.ann import index_store
-    from bpaotu_spark.ann.tombstone import (
+    from bpaotu_spark.ann.lifecycle import (
         _REPAIR_K,
-        _VTOMB_MOD,
-        _VTOMB_RES,
         repair_edges,
         tombstoned_edges_cached,
     )
+    from bpaotu_spark.dedup.lifecycle import DEAD_VECS
+
+    _, _VTOMB_MOD, _VTOMB_RES = DEAD_VECS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -341,12 +338,10 @@ def test_maintenance_cycle_delta_shape(spark, sf_dir, monkeypatch, tmp_path):
     """Every drop doc is 'inserted', no tombstone id survives into the
     delta, and canonicals point at post-cycle corpus members."""
     from bpaotu_spark.ann import index_store
-    from bpaotu_spark.dedup.tombstone import (
-        _CYC_NEW_MOD,
-        _TOMB_MOD,
-        _TOMB_RES,
-        dedup_maintenance_cycle,
-    )
+    from bpaotu_spark.dedup.lifecycle import DEAD_DOCS, DROP, dedup_maintenance_cycle
+
+    _CYC_NEW_MOD = DROP.mod
+    _, _TOMB_MOD, _TOMB_RES = DEAD_DOCS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -394,15 +389,14 @@ def test_tombstone_search_and_bucket_deletes(
     """Post-delete search returns only survivors with sane ratios;
     the simhash/embedding bucket surgeries account sizes exactly."""
     from bpaotu_spark.ann import index_store
-    from bpaotu_spark.ann.tombstone import (
-        _VTOMB_MOD,
-        _VTOMB_RES,
-        ann_tombstone_search_recall,
-    )
-    from bpaotu_spark.dedup.tombstone import (
+    from bpaotu_spark.ann.lifecycle import ann_tombstone_search_recall
+    from bpaotu_spark.dedup.lifecycle import (
+        DEAD_VECS,
         dedup_tombstone_embedding,
         dedup_tombstone_simhash,
     )
+
+    _, _VTOMB_MOD, _VTOMB_RES = DEAD_VECS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()
@@ -445,12 +439,10 @@ def test_maintenance_cycle_minhash_bucket_accounting(
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.catalog import load_table
     from bpaotu_spark.dedup.core import LSH_BUCKET_CAP, minhash_bands
-    from bpaotu_spark.dedup.tombstone import (
-        _CYC_NEW_MOD,
-        _TOMB_MOD,
-        _TOMB_RES,
-        dedup_maintenance_cycle_minhash,
-    )
+    from bpaotu_spark.dedup.lifecycle import DEAD_DOCS, DROP, dedup_maintenance_cycle_minhash
+
+    _CYC_NEW_MOD = DROP.mod
+    _, _TOMB_MOD, _TOMB_RES = DEAD_DOCS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()

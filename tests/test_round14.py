@@ -166,10 +166,7 @@ def test_tombstone_debt_decision_flips_with_share(spark, sf_dir):
     families above the 5% cutoff, the mod-50 vector family below),
     and raising the deterministic tombstone share flips the
     decision."""
-    from bpaotu_spark.operators.consolidate import (
-        DEBT_THRESHOLD_PPM,
-        debt_rows,
-    )
+    from bpaotu_spark.dedup.lifecycle import DEBT_THRESHOLD_PPM, debt_rows
 
     rows = {
         r.family: r
@@ -206,7 +203,7 @@ def test_tombstone_debt_decision_flips_with_share(spark, sf_dir):
 def test_ann_consolidation_decision_consistent(spark, sf_dir):
     """The graph decision row is internally consistent with its own
     documented cutoffs and the persisted artifacts."""
-    from bpaotu_spark.operators.consolidate import (
+    from bpaotu_spark.dedup.lifecycle import (
         GRAPH_REPAIR_THRESHOLD_PPM,
         GRAPH_TOMB_THRESHOLD_PPM,
     )
@@ -278,7 +275,9 @@ def test_graph_consolidate_audit(spark, sf_dir, tmp_path, monkeypatch):
 
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.ann.index_store import cached_frame
-    from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
+    from bpaotu_spark.dedup.lifecycle import DEAD_VECS
+
+    _, _VTOMB_MOD, _VTOMB_RES = DEAD_VECS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()

@@ -79,13 +79,14 @@ def test_truth_store_shapes(spark, sf_dir):
     """Truth invariants: per-query row counts, rank ranges, and the
     survivor table's tombstone exclusion."""
     from bpaotu_spark.ann.core import N_QUERIES, TOP_K
-    from bpaotu_spark.ann.tombstone import _VTOMB_MOD, _VTOMB_RES
+    from bpaotu_spark.dedup.lifecycle import DEAD_VECS
     from bpaotu_spark.ann.truthstore import (
         _TRUTH_K,
         grid_nn_surv_cached,
         grid_top10_cached,
     )
 
+    _, _VTOMB_MOD, _VTOMB_RES = DEAD_VECS
     g = grid_top10_cached(spark, sf_dir)
     per_q = {r.query_id: r.n for r in g.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n")).collect()}
@@ -155,8 +156,10 @@ def test_epoch_incremental_lands_on_new_base(
     from bpaotu_spark.ann import index_store
     from bpaotu_spark.catalog import load_table
     from bpaotu_spark.dedup.core import LSH_BUCKET_CAP, minhash_bands
-    from bpaotu_spark.dedup.incremental import _NEW_MOD
-    from bpaotu_spark.dedup.tombstone import _TOMB_MOD, _TOMB_RES
+    from bpaotu_spark.dedup.lifecycle import DEAD_DOCS, DROP
+
+    _NEW_MOD = DROP.mod
+    _, _TOMB_MOD, _TOMB_RES = DEAD_DOCS
 
     monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
     index_store._MEM.clear()

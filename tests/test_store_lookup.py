@@ -211,10 +211,10 @@ def test_survivor_predicate_agrees_across_paths(spark, sf_dir):
     import pyarrow.dataset as ds
 
     from bpaotu_spark.ann import walk
-    from bpaotu_spark.ann.tombstone import survivors
+    from bpaotu_spark.dedup.lifecycle import DEAD_VECS
 
     vecs = walk.store_vectors(spark, sf_dir)
-    surv = survivors()
+    surv = DEAD_VECS.where(member=False)
     arrow = ds.dataset(vecs.path).to_table(columns=["vec_id"], filter=surv.arrow)
     spark_ids = {r[0] for r in vecs.df.filter(surv.spark).select("vec_id").collect()}
     assert set(arrow.column("vec_id").to_pylist()) == spark_ids
