@@ -4,7 +4,9 @@ The reference's data model (public paths ``bpaotu/otu/models.py``,
 ``bpaotu/otu/query.py``) maps onto the driver test tables as:
 
 - **sample** (reference ``SampleContext``)  = customer; contextual
-  attributes come from customer ⋈ nation ⋈ region.
+  attributes come from customer ⋈ nation ⋈ region, built once per data
+  stamp and published as the store artifact ``sample_ctx``
+  (:func:`sample_context`), the one table the sample pages filter.
 - **OTU** (reference ``OTU`` taxonomy rows) = part, with the rank
   hierarchy p_type → p_brand → p_name.
 - **abundance fact** (reference ``SampleOTU``, the 100 TB table) =
@@ -25,7 +27,11 @@ Scale notes (the part that has to survive 1000 executors):
   in the table size — the reference's comparison page has the same
   contract (it operates on the user's filtered selection).
 - Every filter is a plain Catalyst predicate built by
-  :mod:`bpaotu_spark.plans.filters`, so it pushes into the parquet scan.
+  :mod:`bpaotu_spark.plans.filters`. Taxonomy and fact filters push
+  into the parquet scans; sample (contextual) filters apply to the
+  stored SampleContext, an in-memory scan of the published artifact,
+  as the reference filters its stored ``SampleContext`` table rather
+  than re-joining the dimensions on every page.
 """
 
 from __future__ import annotations
@@ -103,14 +109,31 @@ def abundance_selected(
     )
 
 
-def sample_context(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample page attributes: customer ⋈ nation ⋈ region (all dims)."""
+def _build_sample_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
     ).join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+
+
+def sample_context(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample page attributes: customer ⋈ nation ⋈ region (all dims),
+    served from the store (``sample_ctx``, keyed on the three tables'
+    file stamps). Every call returns the same localCheckpointed frame,
+    so a page plans one in-memory scan with no dimension broadcast;
+    both sides of a self-join carry the same column ids, so such a
+    join must alias each side."""
+    from bpaotu_spark.ann.index_store import cached_frame
+
+    return cached_frame(
+        spark,
+        sf_dir,
+        "sample_ctx",
+        lambda: _build_sample_context(spark, sf_dir),
+        table=("customer", "nation", "region"),
+    )
 
 
 _CONTEXT_SQL = """

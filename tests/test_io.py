@@ -497,6 +497,75 @@ def test_geojson_points_roundtrip(spark, sf_dir, tmp_path):
         )
 
 
+def _streamed_geojson(cells, path, lon_col, lat_col, property_cols) -> int:
+    """The earlier writer: a Spark ``orderBy`` streamed through
+    ``toLocalIterator``, kept as the byte-level reference."""
+    import json as _json
+
+    n = 0
+    with open(path, "w") as f:
+        f.write('{"type": "FeatureCollection", "features": [')
+        it = cells.select(lon_col, lat_col, *property_cols).orderBy(lat_col, lon_col)
+        for row in it.toLocalIterator():
+            feature = {
+                "type": "Feature",
+                "geometry": {"type": "Point", "coordinates": [row[lon_col], row[lat_col]]},
+                "properties": {c: row[c] for c in property_cols},
+            }
+            if n:
+                f.write(", ")
+            f.write(_json.dumps(feature, sort_keys=True))
+            n += 1
+        f.write("]}")
+    return n
+
+
+def test_geojson_order_matches_spark_orderby(spark, tmp_path):
+    """Features come in Spark's ``orderBy(lat, lon)`` order: a NULL bin
+    first, NaN after every number, ties broken by lon."""
+    import json as _json
+
+    from bpaotu_spark.io.geojson import write_geojson_points
+    from bpaotu_spark.session import local_frame
+
+    nan = float("nan")
+    rows = [
+        (3, 2.5, 1), (1, None, 2), (2, -1.0, 3), (None, 2.5, 4),
+        (0, nan, 5), (1, 2.5, 6), (5, -1.0, 7), (None, None, 8),
+    ]
+    cells = local_frame(spark, rows, "bin_x long, bin_y double, n long")
+    out = str(tmp_path / "order.geojson")
+    assert write_geojson_points(cells, out, "bin_x", "bin_y", ("n",)) == len(rows)
+    got = [f["properties"]["n"] for f in _json.loads(open(out).read())["features"]]
+    want = [r.n for r in cells.orderBy("bin_y", "bin_x").collect()]
+    assert got == want
+    assert got[:2] == [8, 2]  # the NULL-lat bins, the NULL lon first
+
+
+def test_geojson_bytes_equal_streamed_writer(spark, sf_dir, tmp_path):
+    from bpaotu_spark.io.geojson import write_geojson_points
+
+    cells = QUERIES["map_binning_2d"](spark, sf_dir)
+    props = ("n_orders", "n_samples", "total_price")
+    new, old = str(tmp_path / "new.geojson"), str(tmp_path / "old.geojson")
+    n = write_geojson_points(cells, new, "bin_x", "bin_y", props)
+    assert n == _streamed_geojson(cells, old, "bin_x", "bin_y", props) > 0
+    assert open(new, "rb").read() == open(old, "rb").read()
+
+
+def test_geojson_past_cap_is_named_error(spark, sf_dir, tmp_path, monkeypatch):
+    from bpaotu_spark.io import geojson
+
+    cells = QUERIES["map_binning_2d"](spark, sf_dir)
+    n = cells.count()
+    out = str(tmp_path / "cap.geojson")
+    monkeypatch.setattr(geojson, "MAX_FEATURES", n)
+    assert geojson.write_geojson_points(cells, out, "bin_x", "bin_y", ("n_orders",)) == n
+    monkeypatch.setattr(geojson, "MAX_FEATURES", n - 1)
+    with pytest.raises(geojson.TooManyFeatures, match="MAX_FEATURES"):
+        geojson.write_geojson_points(cells, out, "bin_x", "bin_y", ("n_orders",))
+
+
 def test_scd2_merge_version_chains(spark, sf_dir, tmp_path):
     """SCD2 merge: changed keys close + reopen, unchanged deltas are
     no-ops (idempotent re-apply), new keys insert, history accumulates

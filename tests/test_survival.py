@@ -15,7 +15,6 @@ and compares the operator with its DuckDB oracle by the value hash of
 from __future__ import annotations
 
 import shutil
-import sys
 
 import duckdb
 import pytest
@@ -54,12 +53,8 @@ FROM '{src}'
 
 
 def _table_hash():
-    # tools/check.py puts a fixed checkout path at the front of
-    # sys.path on import; keep this process's own path
-    saved = list(sys.path)
     from tools.check import table_hash
 
-    sys.path[:] = saved
     return table_hash
 
 

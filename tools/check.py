@@ -18,12 +18,13 @@ DataFrame schema is a FAIL here even when the value hash matches.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 WINDOW = "--window" in sys.argv[2:]
