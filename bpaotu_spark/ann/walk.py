@@ -30,10 +30,12 @@ with an ``isin`` filter on the key: 1-2 ms and no Spark job, where a
 freshly planned Spark collect costs 77-100 ms. Spark's ``_fetch`` is
 the fallback, used when an input has no local path (an
 ``hdfs://``/``s3a://`` store root, an unwritable cache, a frame that
-is not a published artifact) or its files are gone (a concurrent prune):
-one pushed-down ``col IN (...)`` collect per ``_IN_CHUNK`` ids, so no
-predicate grows with the neighbourhood. Both paths return the same
-rows.
+is not a published artifact) or its files are gone (a concurrent prune,
+counted in :data:`FALLBACKS`): one pushed-down ``col IN (...)`` collect
+per ``_IN_CHUNK`` ids, so no predicate grows with the neighbourhood.
+Both paths return the same rows. :func:`read_stored` makes that choice
+for every reader of the store, the permutation tests'
+(:mod:`bpaotu_spark.operators.permtest`) included.
 
 The report leaves the driver as a literal frame
 (:func:`bpaotu_spark.session.local_frame`), planned as a
@@ -71,6 +73,9 @@ derive only from q's rows).
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import Counter
 from collections.abc import Callable, Iterable
 from typing import Any, NamedTuple
 
@@ -155,9 +160,19 @@ def id_mod(col: str, mod: int, res: int, *, equal: bool = True) -> Where:
     return Where(s_rem != res, a_rem != res)
 
 
-def _read(src: Stored, arrow_read: Callable, spark_read: Callable):
+# Arrow reads of published files that failed (the files were gone or
+# unreadable) and were served by Spark instead, by artifact name (the
+# directory name without its fingerprint): the read still succeeds,
+# so this count is how the fallback shows. The names are the store's
+# fixed artifact kinds, which bounds the counter.
+FALLBACKS: Counter[str] = Counter()
+_FALLBACKS_LOCK = threading.Lock()
+
+
+def read_stored(src: Stored, arrow_read: Callable, spark_read: Callable):
     """``arrow_read(dataset)`` over ``src``'s published files, or
-    ``spark_read(src.df)`` when it has none or they are gone."""
+    ``spark_read(src.df)`` when it has none or they are gone; a failed
+    Arrow read counts in :data:`FALLBACKS`."""
     if src.path is not None:
         import pyarrow as pa
         import pyarrow.dataset as ds
@@ -165,7 +180,10 @@ def _read(src: Stored, arrow_read: Callable, spark_read: Callable):
         try:
             return arrow_read(ds.dataset(src.path, format="parquet"))
         except (OSError, pa.ArrowException):
-            pass  # files gone (a concurrent prune): Spark reads the same rows
+            # files gone (a concurrent prune): Spark reads the same rows
+            name = os.path.basename(src.path.rstrip("/")).rsplit("-", 1)[0]
+            with _FALLBACKS_LOCK:
+                FALLBACKS[name] += 1
     return spark_read(src.df)
 
 
@@ -210,7 +228,7 @@ def lookup(
             df = df.filter(where.spark)
         return [tuple(r) for r in _fetch(df.select(*cols), key, ids)]
 
-    return _read(src, arrow_read, spark_read)
+    return read_stored(src, arrow_read, spark_read)
 
 
 def collect_qv(
@@ -414,7 +432,7 @@ def entry_init(
         rows = df.orderBy(F.desc(key)).limit(1).select(*src.cols).collect()
         return tuple(rows[0]) if rows else None
 
-    row = _read(src, arrow_read, spark_read)
+    row = read_stored(src, arrow_read, spark_read)
     if row is None:
         raise NoEntryPoint(f"no {key} to enter the walk from: the frame is empty")
     eid = int(row[0])

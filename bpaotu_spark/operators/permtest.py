@@ -33,23 +33,34 @@ quantity is ever divided. ANOSIM compares the rank-mean DIFFERENCE
 after), and PERMANOVA compares pseudo-F via 128-bit
 cross-multiplication, never forming the ratio.
 
-Scale shape: the stored pair matrix (diststore) is read once by ONE
-``mapInArrow`` kernel (:func:`_pair_sums`). The 33-bit label masks
-travel in its closure — one integer per selected sample, the bound of
-the broadcast literal frame they replace. Per Arrow batch, numpy
-computes each of the 33 per-b conditional sums (and counts) in int64:
-PERMANOVA sums d² with ``d_ppm`` in [0, 10⁶], so a batch sum stays
-below 2⁶³ while a batch holds fewer than 9.2M rows; the kernel checks
-both bounds (ANOSIM's rank sums likewise, from the batch's largest
-rank) and raises :class:`PairSumBound` instead of wrapping. Batches
-accumulate in Python ints and each task emits one (slot, rows, sum)
-row per slot that saw a row, so a missing slot is the oracle's NULL.
-The integer finish (per-b statistic, n_ge_obs, p_milli) runs in the
-driver over those rows and the result leaves as a one-row literal
-frame. Driver-side bound: the collected study selection, one
-(sample_id, grp) row per selected sample, and 33 mask bits per
-sample. B is a constant. ANOSIM's tie-averaged ranks (the ``dcum``
-window) stay a Spark plan under the kernel.
+Scale shape: both inputs are published store artifacts (diststore),
+read through :func:`bpaotu_spark.ann.walk.read_stored` — the access
+path the graph walks use. The study selection ``anosim_sel`` is one
+``pyarrow.dataset`` scan. The pair matrix ``bray_pairs_anosim`` is
+reduced batch by batch by ONE kernel (:func:`_pair_sums`), which runs
+in the driver over the published files, with no Spark job; only when
+the store has no local files, or they are gone, does the same kernel
+run as a ``mapInArrow`` pass over the served frame. The 33-bit label
+masks travel in its closure, one integer per selected sample. Per
+Arrow batch, numpy computes each of the 33 per-b conditional sums
+(and counts) in int64: PERMANOVA sums d² with ``d_ppm`` in [0, 10⁶],
+so a batch sum stays below 2⁶³ while a batch holds fewer than 9.2M
+rows; the kernel checks both bounds (ANOSIM's rank sums likewise, from
+the batch's largest rank) and raises :class:`PairSumBound` instead of
+wrapping. ANOSIM's tie-averaged ranks come from a ``d_ppm`` histogram
+read over the same input (the oracle's ``dcnt``/``dcum``):
+avg_rank_milli = cum_before·1000 + (cnt + 1)·500 is the kernel's value
+map. Batches accumulate in Python ints and the kernel emits one (slot,
+rows, sum) row per slot that saw a row (per task on the Spark path),
+so a missing slot is the oracle's NULL. The integer finish (per-b
+statistic, n_ge_obs, p_milli) runs in the driver over those rows and
+the result leaves as a one-row literal frame.
+
+Driver-side bound: one batch of at most ``_BATCH_ROWS`` pairs at a
+time with its (slots × batch) matrix; the selection and its masks, one
+(sample_id, grp) row and one integer per selected sample; and ANOSIM's
+histogram, at most 10⁶ + 1 bins because every ``d_ppm`` is checked to
+lie in [0, 10⁶]. B is a constant.
 """
 
 from __future__ import annotations
@@ -61,9 +72,14 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from bpaotu_spark.ann import walk
 from bpaotu_spark.catalog import load_table
 from bpaotu_spark.operators.bpaotu import ABUNDANCE_CTE, abundance_selected
-from bpaotu_spark.operators.diststore import anosim_sel
+from bpaotu_spark.operators.diststore import (
+    _DIST_TABLES,
+    anosim_pairs_cached,
+    anosim_sel_cached,
+)
 from bpaotu_spark.operators.ecology import _ANOSIM_SEL
 from bpaotu_spark.registry import register
 from bpaotu_spark.session import local_frame
@@ -126,18 +142,26 @@ pa AS (
 """.strip()
 
 
-def _dpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Pairs per Arrow batch the driver reduces: Spark's default
+# spark.sql.execution.arrow.maxRecordsPerBatch, so the kernel sees
+# batches of one bound on either path.
+_BATCH_ROWS = 10_000
+
+
+def _stored_pairs(spark: SparkSession, sf_dir: str) -> walk.Stored:
     """(sample_a, sample_b, d_ppm) over the bounded selection — READ
-    from the distance store (r12 VERDICT item 1): the pair matrix is
-    built once per data fingerprint by
+    from the distance store: the pair matrix is built once per data
+    fingerprint by
     :func:`bpaotu_spark.operators.diststore.anosim_pairs_cached`;
     both permutation tests (and the dispersion/pseudo-F family) only
     re-label and re-aggregate the stored pairs, the textbook
     permutation-on-distance-matrix shape (Anderson 2001)."""
-    from bpaotu_spark.operators.diststore import anosim_pairs_cached
-
-    return anosim_pairs_cached(spark, sf_dir).select(
-        "sample_a", "sample_b", "d_ppm"
+    return walk.stored(
+        anosim_pairs_cached(spark, sf_dir),
+        sf_dir,
+        "bray_pairs_anosim",
+        ("sample_a", "sample_b", "d_ppm"),
+        table=_DIST_TABLES,
     )
 
 
@@ -189,18 +213,63 @@ _I64_MAX = 2**63 - 1
 _D_PPM_MAX = 10**6
 
 
-def _d_ppm_squared(d):
-    """d² of a batch's ``d_ppm`` values, after checking both bounds
-    of an exact int64 batch sum: d_ppm in [0, 10⁶] (d² ≤ 10¹²), and
-    fewer than 2⁶³ / 10¹² (9.2M) rows."""
+def _check_d_ppm(d):
+    """``d`` after checking that every value lies in [0, 10⁶]."""
     if len(d) and (int(d.min()) < 0 or int(d.max()) > _D_PPM_MAX):
         raise PairSumBound(
             f"d_ppm in [{int(d.min())}, {int(d.max())}] leaves"
             f" [0, {_D_PPM_MAX}]"
         )
+    return d
+
+
+def _d_ppm_squared(d):
+    """d² of a batch's ``d_ppm`` values, after checking both bounds
+    of an exact int64 batch sum: d_ppm in [0, 10⁶] (d² ≤ 10¹²), and
+    fewer than 2⁶³ / 10¹² (9.2M) rows."""
+    _check_d_ppm(d)
     if len(d) > _I64_MAX // _D_PPM_MAX**2:
         raise PairSumBound(f"a batch of {len(d)} pairs can overflow d² sums")
     return d * d
+
+
+def _rank_milli(pairs: walk.Stored) -> Callable:
+    """ANOSIM's ``value`` map for :func:`_pair_sums`: ``d_ppm`` ->
+    avg_rank_milli = cum_before·1000 + (cnt + 1)·500, the
+    tie-averaged rank (× 1000) of the distance among all stored
+    pairs. It comes from a ``d_ppm`` histogram read into the driver,
+    batch by batch from the published files or as one grouped Spark
+    collect; every value is checked to lie in [0, 10⁶], so the
+    histogram holds at most 10⁶ + 1 bins."""
+    import numpy as np
+
+    d = pairs.cols[2]
+
+    def arrow_read(dset) -> list:
+        return [
+            np.unique(b.column(0).to_numpy(), return_counts=True)
+            for b in dset.to_batches(columns=[d], batch_size=_BATCH_ROWS)
+        ]
+
+    def spark_read(df: DataFrame) -> list:
+        # bounded collect: of 10⁶ + 2 distinct values one leaves
+        # [0, 10⁶], which the check below raises on
+        rows = df.groupBy(d).count().limit(_D_PPM_MAX + 2).collect()
+        return [
+            (
+                np.array([r[0] for r in rows], np.int64),
+                np.array([r[1] for r in rows], np.int64),
+            )
+        ]
+
+    parts = walk.read_stored(pairs, arrow_read, spark_read)
+    vals = np.concatenate([np.zeros(0, np.int64), *(v for v, _ in parts)])
+    cnts = np.concatenate([np.zeros(0, np.int64), *(c for _, c in parts)])
+    u, inv = np.unique(_check_d_ppm(vals), return_inverse=True)
+    cnt = np.zeros(len(u), np.int64)
+    np.add.at(cnt, inv, cnts)
+    rank = (np.cumsum(cnt) - cnt) * 1000 + (cnt + 1) * 500
+    return lambda v: rank[np.searchsorted(u, v)]
 
 
 def _batch_sums(ma, mb, v, slots: Callable):
@@ -219,16 +288,19 @@ def _batch_sums(ma, mb, v, slots: Callable):
 
 
 def _pair_sums(
-    pairs: DataFrame,
+    pairs: walk.Stored,
     masks: dict[int, int],
     slots: Callable,
     value: Callable | None = None,
 ) -> dict[int, tuple[int, int]]:
     """slot -> (rows, sum) over ``pairs`` (sample_a, sample_b, value
-    column) whose two samples both hold a mask, for each slot that saw
-    a row: one ``mapInArrow`` pass, then one collect of at most
-    (tasks × slots) rows. ``value`` maps the batch's value column to
-    the int64 summand (default: the column itself)."""
+    column, named in ``pairs.cols``) whose two samples both hold a
+    mask, for each slot that saw a row. One kernel reduces the pairs
+    batch by batch: in the driver over the published files, or, as
+    the fallback, in one ``mapInArrow`` pass over ``pairs.df`` and one
+    collect of at most (tasks × slots) rows. ``value`` maps the
+    batch's value column to the int64 summand (default: the column
+    itself)."""
     import numpy as np
 
     if not masks:
@@ -270,10 +342,27 @@ def _pair_sums(
             names=["slot", "n", "s"],
         )
 
+    cols = list(pairs.cols)
+
+    def arrow_read(dset) -> list:
+        batches = dset.to_batches(columns=cols, batch_size=_BATCH_ROWS)
+        return [
+            row
+            for rb in kernel(batches)
+            for row in zip(*(c.to_pylist() for c in rb.columns))
+        ]
+
+    def spark_read(df: DataFrame) -> list:
+        return (
+            df.select(*cols)
+            .mapInArrow(kernel, "slot int, n long, s decimal(38,0)")
+            .collect()
+        )
+
     out: dict[int, tuple[int, int]] = {}
-    for r in pairs.mapInArrow(kernel, "slot int, n long, s decimal(38,0)").collect():
-        n0, s0 = out.get(r[0], (0, 0))
-        out[r[0]] = (n0 + r[1], s0 + int(r[2]))
+    for slot, n, s in walk.read_stored(pairs, arrow_read, spark_read):
+        n0, s0 = out.get(slot, (0, 0))
+        out[slot] = (n0 + n, s0 + int(s))
     return out
 
 
@@ -303,7 +392,23 @@ def _permanova_slots(ma, mb):
 
 
 def _collect_sel(spark: SparkSession, sf_dir: str) -> list[tuple[int, str]]:
-    return [(int(r[0]), r[1]) for r in anosim_sel(spark, sf_dir).collect()]
+    """The study selection (sample_id, grp) in the driver: one Arrow
+    scan of the published ``anosim_sel`` artifact, or a Spark collect
+    of the served frame."""
+    cols = ("sample_id", "grp")
+    src = walk.stored(
+        anosim_sel_cached(spark, sf_dir), sf_dir, "anosim_sel", cols,
+        table="customer",
+    )
+
+    def arrow_read(dset) -> list[tuple[int, str]]:
+        t = dset.to_table(columns=list(cols))
+        return list(zip(*(t.column(c).to_pylist() for c in cols)))
+
+    def spark_read(df: DataFrame) -> list[tuple[int, str]]:
+        return [(int(r[0]), r[1]) for r in df.select(*cols).collect()]
+
+    return walk.read_stored(src, arrow_read, spark_read)
 
 
 def _p_milli(n_ge_obs: int) -> int:
@@ -373,26 +478,8 @@ def anosim_permutation_p(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator of Clarke's R (the constant M/2 cancels under every
     permutation, and each mean divides only positive rank sums)."""
     masks = _perm_masks(_collect_sel(spark, sf_dir))
-    dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
-    dcnt = dpairs.groupBy("d_ppm").agg(F.count(F.lit(1)).alias("cnt"))
-    wv = Window.orderBy("d_ppm").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    dcum = dcnt.select(
-        "d_ppm",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0))
-        .cast("bigint")
-        .alias("cum_before"),
-        "cnt",
-    )
-    rp = dpairs.join(dcum, "d_ppm").select(
-        "sample_a",
-        "sample_b",
-        F.expr("cum_before * 1000 + (cnt + 1) * 500").alias(
-            "avg_rank_milli"
-        ),
-    )
-    sums = _pair_sums(rp, masks, _anosim_slots)
+    pairs = _stored_pairs(spark, sf_dir)
+    sums = _pair_sums(pairs, masks, _anosim_slots, _rank_milli(pairs))
     # integer finish in the driver (all operands non-negative, so //
     # is Spark's div); with no pair the oracle has no per-b row at all.
     # A missing within slot is a zero count and sum (the oracle's ELSE 0)
@@ -471,14 +558,15 @@ def permanova_permutation_p(
     ratio is ever formed, so integer semantics match both engines."""
     sel = _collect_sel(spark, sf_dir)
     masks = _perm_masks(sel)
-    dpairs = _dpairs(spark, sf_dir)  # store-served, already checkpointed
     # bitmask collapse (see _perm_masks): a pair is within-'MACHINERY'
     # under b iff bit b is set in BOTH masks, within the other group
     # iff clear in both — so every permutation's per-group d² sums are
     # slots of ONE kernel pass over the stored pair table (the oracle
     # keeps the explicit per-b join form — same values). A slot no
     # pair reached is absent: the oracle's missing (b, grp) row.
-    sums = _pair_sums(dpairs, masks, _permanova_slots, _d_ppm_squared)
+    sums = _pair_sums(
+        _stored_pairs(spark, sf_dir), masks, _permanova_slots, _d_ppm_squared
+    )
     # integer finish in the driver. Group sizes are permutation-
     # invariant (each draw rank-matches the observed label multiset).
     n_g = Counter(g for _, g in sel)

@@ -11,8 +11,9 @@ segments BUILDING and MACHINERY, nation keys below 5.
 * ``one_segment`` — only BUILDING samples are selected;
 * ``empty_sel`` — no customer is selected.
 
-Every case reads a fresh store directory, so the distance pairs are
-built on the store-miss path.
+Every case reads a fresh store directory, so the selection and the
+distance pairs are built on the store-miss path and then read from
+the published files (no case falls back to Spark).
 """
 
 from __future__ import annotations
@@ -75,12 +76,16 @@ def fresh_store(tmp_path, monkeypatch):
 def test_degenerate_selection_matches_oracle(
     spark, sf_dir, tmp_path, fresh_store, shape, key
 ):
+    from bpaotu_spark.ann import walk
+
     load_all()
     data = tmp_path / "data"
     data.mkdir()
     case_dir = _case_dir(sf_dir, data, shape)
+    before = walk.FALLBACKS.copy()
     sdf = QUERIES[key](spark, case_dir)
     got = [tuple(r) for r in sdf.collect()]
+    assert not walk.FALLBACKS - before  # even an empty artifact reads through Arrow
 
     con = duckdb.connect()
     for t in TABLE_NAMES:

@@ -7,8 +7,10 @@ permutation tests.
   must give the same rows;
 * ``ann/index_store.py`` keys an artifact on the file stamp of every
   file under its source table, and caps the process tier;
-* ``operators/permtest.py`` reduces the stored pairs in one
-  ``mapInArrow`` kernel whose int64 sums are bounded.
+* ``operators/permtest.py`` reads the study selection and reduces the
+  stored pairs in one kernel whose int64 sums are bounded: in the
+  driver over the published files, or as a ``mapInArrow`` pass when
+  they are missing, with the same rows either way.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ COLD_KEYS = (
     "permanova_permutation_p",
     "anosim_permutation_p",
 )
+PERM_KEYS = ("anosim_permutation_p", "permanova_permutation_p")
 
 
 @pytest.fixture()
@@ -74,17 +77,20 @@ def test_cold_store_matches_oracle(spark, sf_dir, fresh_store, key):
     its DuckDB oracle."""
     load_all()
     sdf = QUERIES[key](spark, sf_dir)
-    got = [tuple(r) for r in sdf.collect()]
+    _assert_oracle_rows(key, sf_dir, [tuple(r) for r in sdf.collect()], sdf.columns)
+
+
+def _assert_oracle_rows(key: str, sf_dir: str, got: list, columns: list) -> None:
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     cur = con.execute(ORACLES[key])
     cols = [d[0] for d in cur.description]
     want = cur.fetchall()
-    assert sorted(sdf.columns) == sorted(cols)
+    assert sorted(columns) == sorted(cols)
     assert got and len(got) == len(want)
     table_hash = _table_hash()
-    assert table_hash(got, sdf.columns) == table_hash(want, cols), (got, want)
+    assert table_hash(got, columns) == table_hash(want, cols), (got, want)
 
 
 @pytest.fixture(scope="module")
@@ -179,6 +185,58 @@ def test_warm_beam_walk_runs_no_spark_job(spark, sf_dir):
     assert len(jobs) > 0
 
 
+@pytest.fixture(scope="module")
+def perm_rows(spark, sf_dir):
+    """Rows of both permutation tests on the local store (published on
+    first use, then read through Arrow); each equals its oracle."""
+    load_all()
+    rows = {}
+    for key in PERM_KEYS:
+        sdf = QUERIES[key](spark, sf_dir)
+        rows[key] = [tuple(r) for r in sdf.collect()]
+        _assert_oracle_rows(key, sf_dir, rows[key], sdf.columns)
+    return rows
+
+
+@pytest.mark.parametrize("key", PERM_KEYS)
+def test_warm_permutation_build_runs_no_spark_job(spark, sf_dir, perm_rows, key):
+    """On a warm local store the selection read, the ANOSIM histogram
+    and the pair kernel all run in the driver: building the result
+    starts no Spark job."""
+    sdf, jobs = _jobs_in_group(
+        spark, f"test_store_lookup/warm/{key}", lambda: QUERIES[key](spark, sf_dir)
+    )
+    assert jobs == []
+    assert [tuple(r) for r in sdf.collect()] == perm_rows[key]
+
+
+@pytest.mark.parametrize("mode", ["no_path", "files_gone"])
+@pytest.mark.parametrize("key", PERM_KEYS)
+def test_permutation_spark_fallback_gives_arrow_rows(
+    spark, sf_dir, perm_rows, tmp_path, monkeypatch, mode, key
+):
+    """Without local files (no path, or a directory removed after it
+    was resolved) both inputs are read by Spark, which gives the Arrow
+    path's rows; a removed directory counts as a fallback."""
+    from bpaotu_spark.ann import index_store, walk
+
+    real = index_store.artifact_dir
+    fake = _no_path(real) if mode == "no_path" else _files_gone(real, tmp_path)
+    monkeypatch.setattr(index_store, "artifact_dir", fake)
+    before = walk.FALLBACKS.copy()
+    sdf, jobs = _jobs_in_group(
+        spark, f"test_store_lookup/{mode}/{key}", lambda: QUERIES[key](spark, sf_dir)
+    )
+    assert len(jobs) > 0
+    assert [tuple(r) for r in sdf.collect()] == perm_rows[key]
+    counted = walk.FALLBACKS - before
+    if mode == "files_gone":
+        assert counted["anosim_sel"] == 1
+        assert counted["bray_pairs_anosim"] >= 1
+    else:
+        assert not counted
+
+
 def test_batch_scoring_equals_the_python_loop():
     """The numpy candidate scorer equals ``d2_exact`` (the Python loop
     kept as the reference) and refuses coordinates whose d² sum could
@@ -225,6 +283,7 @@ def test_d_ppm_outside_bound_raises_named_error(spark):
     """d_ppm outside [0, 10⁶] or a batch past 9.2M rows could wrap the
     int64 d² sums: both raise PairSumBound, in the driver and from the
     kernel's Spark task."""
+    from bpaotu_spark.ann import walk
     from bpaotu_spark.operators import permtest
     from bpaotu_spark.session import local_frame
 
@@ -241,14 +300,41 @@ def test_d_ppm_outside_bound_raises_named_error(spark):
     )
     with pytest.raises(Exception, match="PairSumBound"):
         permtest._pair_sums(
-            pairs, {1: 0, 2: 1}, permtest._permanova_slots,
-            permtest._d_ppm_squared,
+            walk.Stored(pairs, tuple(pairs.columns)), {1: 0, 2: 1},
+            permtest._permanova_slots, permtest._d_ppm_squared,
         )
+
+
+def test_arrow_path_raises_pair_sum_bound(spark, tmp_path):
+    """The driver-side kernel and the ANOSIM histogram raise
+    PairSumBound themselves on published files whose d_ppm leaves
+    [0, 10⁶]; the histogram does so on the Spark path as well."""
+    from bpaotu_spark.ann import walk
+    from bpaotu_spark.operators import permtest
+    from bpaotu_spark.session import local_frame
+
+    cols = ("sample_a", "sample_b", "d_ppm")
+    path = tmp_path / "bray_pairs_anosim-0"
+    path.mkdir()
+    pq.write_table(
+        pa.table({c: pa.array(v, pa.int64()) for c, v in zip(cols, ([1], [2], [2 * 10**6]))}),
+        path / "part-0.parquet",
+    )
+    pairs = local_frame(spark, [(1, 2, 2 * 10**6)], "sample_a long, sample_b long, d_ppm long")
+    src = walk.Stored(pairs, cols, str(path))
+    with pytest.raises(permtest.PairSumBound, match="d_ppm"):
+        permtest._pair_sums(
+            src, {1: 0, 2: 1}, permtest._permanova_slots, permtest._d_ppm_squared
+        )
+    for s in (src, src._replace(path=None)):
+        with pytest.raises(permtest.PairSumBound, match="d_ppm"):
+            permtest._rank_milli(s)
 
 
 def test_kernel_sums_match_python(spark):
     """Slot sums of the kernel equal a direct Python evaluation of the
     masks, and a pair with an unselected end is dropped."""
+    from bpaotu_spark.ann import walk
     from bpaotu_spark.operators import permtest
     from bpaotu_spark.session import local_frame
 
@@ -258,7 +344,8 @@ def test_kernel_sums_match_python(spark):
         spark, rows, "sample_a long, sample_b long, d_ppm long"
     )
     got = permtest._pair_sums(
-        pairs, masks, permtest._permanova_slots, permtest._d_ppm_squared
+        walk.Stored(pairs, tuple(pairs.columns)), masks, permtest._permanova_slots,
+        permtest._d_ppm_squared,
     )
     want: dict[int, tuple[int, int]] = {}
     B = permtest._B_PERM
