@@ -876,9 +876,9 @@ def ann_hnsw_layered_search(
     # construction — the HNSW upper-layer argument), symmetric closure.
     # The k=3 build runs only on an index-store miss.
     on_l1 = id_mod("vec_id", _L1_MOD, 0)
-    l1 = vecs.df.filter(on_l1.spark)
 
     def _build_l1edges():
+        l1 = vecs.df().filter(on_l1.spark)
         a = l1.select(F.col("vec_id").alias("src"), F.col("q").alias("qa"))
         b = l1.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb"))
         wl1 = Window.partitionBy("src").orderBy("d2l", "dst")
@@ -900,7 +900,7 @@ def ann_hnsw_layered_search(
     from bpaotu_spark.ann.index_store import cached_frame
 
     l1edges = stored(
-        cached_frame(spark, sf_dir, "hnsw_l1", _build_l1edges),
+        lambda: cached_frame(spark, sf_dir, "hnsw_l1", _build_l1edges),
         sf_dir,
         "hnsw_l1",
         ("src", "dst"),
@@ -1056,7 +1056,7 @@ def ann_beam_topk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t_rows = lookup(
         stored(
-            grid_top10_cached(spark, sf_dir),
+            lambda: grid_top10_cached(spark, sf_dir),
             sf_dir,
             "truth_grid_top10",
             ("query_id", "cand_id", "trank"),

@@ -237,7 +237,7 @@ def ann_hnsw_multilayer_search(
     )
 
     vecs = store_vectors(spark, sf_dir)
-    eq = vecs.df
+    eq = vecs.df()
     qs = eq.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )

@@ -36,6 +36,8 @@ Operators; every oracle rebuilds the graphs from scratch:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -303,7 +305,7 @@ def ann_graph_tombstone_repair(
 
 
 def _survivor_search(
-    spark: SparkSession, sf_dir: str, edges: DataFrame, name: str
+    spark: SparkSession, sf_dir: str, edges: Callable[[], DataFrame], name: str
 ) -> DataFrame:
     from bpaotu_spark.ann.truthstore import grid_nn_surv
     from bpaotu_spark.ann.walk import (
@@ -404,8 +406,10 @@ def ann_tombstone_search_recall(
     surviving neighbour — (query_id, found_id, found_d2, true_id,
     true_d2, exact_hit, dist_ratio_milli): the navigability proof of
     the local re-link."""
-    edges = tombstoned_edges_cached(spark, sf_dir)
-    return _survivor_search(spark, sf_dir, edges, "conn_edges_tomb")
+    return _survivor_search(
+        spark, sf_dir, lambda: tombstoned_edges_cached(spark, sf_dir),
+        "conn_edges_tomb",
+    )
 
 
 def _consolidate_audit_oracle() -> str:
@@ -598,5 +602,7 @@ def ann_epoch_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``conn_edges_rebuilt``) vs the persisted survivor ground truth —
     the post-swap query path, scored (the report of
     ``ann_tombstone_search_recall``)."""
-    edges = rebuilt_edges_cached(spark, sf_dir)
-    return _survivor_search(spark, sf_dir, edges, "conn_edges_rebuilt")
+    return _survivor_search(
+        spark, sf_dir, lambda: rebuilt_edges_cached(spark, sf_dir),
+        "conn_edges_rebuilt",
+    )

@@ -155,7 +155,7 @@ def grid_nn(
     from bpaotu_spark.ann.walk import Where, collect_truth_nn, stored
 
     top10 = stored(
-        grid_top10_cached(spark, sf_dir),
+        lambda: grid_top10_cached(spark, sf_dir),
         sf_dir,
         "truth_grid_top10",
         ("query_id", "cand_id", "cand_d2"),
@@ -173,7 +173,7 @@ def grid_nn_surv(
     from bpaotu_spark.ann.walk import collect_truth_nn, stored
 
     surv = stored(
-        grid_nn_surv_cached(spark, sf_dir),
+        lambda: grid_nn_surv_cached(spark, sf_dir),
         sf_dir,
         "truth_grid_nn_surv",
         ("query_id", "true_id", "true_d2"),

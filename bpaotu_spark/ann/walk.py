@@ -22,20 +22,23 @@ the driver over those bounded rows.
 Lookup path: the walk inputs are published store artifacts (the edge
 lists ``conn_edges``, ``conn_edges_tomb``, ``conn_edges_rebuilt``,
 ``hnsw_l1``, the vectors ``qemb`` and the truth tables), written by
-Spark. A caller passes each one as a :class:`Stored` — the served
-Spark frame, its column names and, from
+Spark. A caller passes each one as a :class:`Stored` — a thunk that
+serves the Spark frame, the column names and, from
 :func:`bpaotu_spark.ann.index_store.artifact_dir`, the local directory
-of its files. A fetch reads those files through ``pyarrow.dataset``
-with an ``isin`` filter on the key: 1-2 ms and no Spark job, where a
-freshly planned Spark collect costs 77-100 ms. Spark's ``_fetch`` is
-the fallback, used when an input has no local path (an
-``hdfs://``/``s3a://`` store root, an unwritable cache, a frame that
-is not a published artifact) or its files are gone (a concurrent prune,
-counted in :data:`FALLBACKS`): one pushed-down ``col IN (...)`` collect
-per ``_IN_CHUNK`` ids, so no predicate grows with the neighbourhood.
-Both paths return the same rows. :func:`read_stored` makes that choice
-for every reader of the store, the permutation tests'
-(:mod:`bpaotu_spark.operators.permtest`) included.
+of its files. :func:`stored` looks the directory up first and calls
+the thunk only on a miss (which builds and publishes the artifact), so
+a warm store serves a walk without any frame, ``cached_frame`` call or
+Spark job. A fetch reads the files through ``pyarrow.dataset`` with an
+``isin`` filter on the key: 1-2 ms and no Spark job, where a freshly
+planned Spark collect costs 77-100 ms. Spark's ``_fetch`` over the
+thunk's frame is the fallback, used when an input has no local path
+(an ``hdfs://``/``s3a://`` store root, an unwritable cache, a frame
+that is not a published artifact) or its files are gone (a concurrent
+prune, counted in :data:`FALLBACKS`): one pushed-down ``col IN (...)``
+collect per ``_IN_CHUNK`` ids, so no predicate grows with the
+neighbourhood. Both paths return the same rows. :func:`read_stored`
+makes that choice for every reader of the store, the permutation
+tests' (:mod:`bpaotu_spark.operators.permtest`) included.
 
 The report leaves the driver as a literal frame
 (:func:`bpaotu_spark.session.local_frame`), planned as a
@@ -92,12 +95,13 @@ _IN_CHUNK = 1024
 
 
 class Stored(NamedTuple):
-    """A frame the walk reads rows of by key: ``df`` is the Spark frame
-    (the fallback path), ``cols`` the columns read, key column first,
+    """A frame the walk reads rows of by key: ``df`` is a thunk that
+    returns the Spark frame (the fallback path, called only when a
+    reader needs Spark), ``cols`` the columns read, key column first,
     and ``path`` the local directory of the same rows as published
     store files, or None."""
 
-    df: DataFrame
+    df: Callable[[], DataFrame]
     cols: tuple[str, ...]
     path: str | None = None
 
@@ -112,24 +116,33 @@ class Where(NamedTuple):
 
 
 def stored(
-    df: DataFrame,
+    frame: Callable[[], DataFrame],
     sf_dir: str,
     name: str,
     cols: Iterable[str],
     table: str | tuple[str, ...] = "embeddings",
 ) -> Stored:
-    """``df``, the frame ``cached_frame`` served as artifact ``name``,
-    with the local directory of that artifact's files."""
+    """Artifact ``name`` as a :class:`Stored`: the local directory of
+    its published files and ``frame``, the thunk that serves it
+    through ``cached_frame``. ``frame`` runs here only on a miss,
+    where it builds and publishes the artifact."""
     from bpaotu_spark.ann.index_store import artifact_dir
 
-    return Stored(df, tuple(cols), artifact_dir(sf_dir, name, table))
+    path = artifact_dir(sf_dir, name, table)
+    if path is None:
+        df = frame()
+        path = artifact_dir(sf_dir, name, table)
+        frame = lambda: df  # noqa: E731
+    return Stored(frame, tuple(cols), path)
 
 
 def store_vectors(spark: SparkSession, sf_dir: str) -> Stored:
     """The published quantized vectors ``qemb``: (vec_id, q)."""
     from bpaotu_spark.ann.index_store import qemb_cached
 
-    return stored(qemb_cached(spark, sf_dir), sf_dir, "qemb", ("vec_id", "q"))
+    return stored(
+        lambda: qemb_cached(spark, sf_dir), sf_dir, "qemb", ("vec_id", "q")
+    )
 
 
 def store_graph(spark: SparkSession, sf_dir: str) -> Stored:
@@ -138,7 +151,7 @@ def store_graph(spark: SparkSession, sf_dir: str) -> Stored:
     from bpaotu_spark.ann.index_store import connected_edges_cached
 
     return stored(
-        connected_edges_cached(spark, sf_dir),
+        lambda: connected_edges_cached(spark, sf_dir),
         sf_dir,
         "conn_edges",
         ("vec_id", "neighbor_id"),
@@ -171,8 +184,8 @@ _FALLBACKS_LOCK = threading.Lock()
 
 def read_stored(src: Stored, arrow_read: Callable, spark_read: Callable):
     """``arrow_read(dataset)`` over ``src``'s published files, or
-    ``spark_read(src.df)`` when it has none or they are gone; a failed
-    Arrow read counts in :data:`FALLBACKS`."""
+    ``spark_read`` of the frame ``src.df()`` serves when it has none or
+    they are gone; a failed Arrow read counts in :data:`FALLBACKS`."""
     if src.path is not None:
         import pyarrow as pa
         import pyarrow.dataset as ds
@@ -184,7 +197,7 @@ def read_stored(src: Stored, arrow_read: Callable, spark_read: Callable):
             name = os.path.basename(src.path.rstrip("/")).rsplit("-", 1)[0]
             with _FALLBACKS_LOCK:
                 FALLBACKS[name] += 1
-    return spark_read(src.df)
+    return spark_read(src.df())
 
 
 def _pycol(col) -> list:

@@ -11,14 +11,20 @@ The reference's data model (public paths ``bpaotu/otu/models.py``,
   hierarchy p_type → p_brand → p_name.
 - **abundance fact** (reference ``SampleOTU``, the 100 TB table) =
   lineitem ⋈ orders: ``(sample_id=o_custkey, otu_id=l_partkey,
-  cnt=l_quantity)``.
+  cnt=l_quantity, order_id=l_orderkey)``, built once per data stamp
+  and published as the store artifact ``sample_otu``
+  (:func:`sample_otu`); :func:`abundance_selected` scans its files in
+  place, as the reference's pages read their physical ``SampleOTU``
+  table.
 
 Scale notes (the part that has to survive 1000 executors):
 
 - The abundance join (lineitem ⋈ orders on orderkey) carries NO
   broadcast hint: AQE broadcasts it at test scale, and at full scale it
   becomes a shuffle join on the natural key — on a real lake both
-  facts would be bucketed by orderkey so it is shuffle-free.
+  facts would be bucketed by orderkey so it is shuffle-free. It runs
+  once per data stamp, to publish ``sample_otu``; a sample selection
+  then joins the published fact alone.
 - All *dimension* joins (customer/nation/region/part) are explicit
   ``F.broadcast``: they stay bounded while the fact grows.
 - Pairwise operators (Bray-Curtis) are **blocked**: pairs are only
@@ -39,7 +45,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bpaotu_spark.catalog import load_table, maybe_broadcast
+from bpaotu_spark.catalog import _memo_schema, load_table, maybe_broadcast
 from bpaotu_spark.plans.filters import ContextualFilter, Pred
 from bpaotu_spark.plans.taxonomy import RankFix, TaxonomyFilter, drilldown_options
 from bpaotu_spark.registry import ORACLES, register
@@ -71,24 +77,55 @@ def abundance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SAMPLE_OTU_TABLES = ("lineitem", "orders")
+
+
+def sample_otu(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """The published SampleOTU fact ``sample_otu`` — :func:`abundance`'s
+    rows, keyed on the file stamps of lineitem and orders, built and
+    published on a store miss — as a parquet scan of its files in
+    place (no checkpoint; the schema is memoized, so a warm call runs
+    no job). None when the store is unwritable."""
+    from bpaotu_spark.ann.index_store import publish
+
+    path = publish(
+        spark,
+        sf_dir,
+        "sample_otu",
+        lambda: abundance(spark, sf_dir),
+        table=SAMPLE_OTU_TABLES,
+    )
+    if path is None:
+        return None
+    schema = _memo_schema(spark, path)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
+
+
 def abundance_selected(
     spark: SparkSession, sf_dir: str, sel: DataFrame
 ) -> DataFrame:
-    """Abundance fact restricted to a sample selection, with the
-    selection pushed BELOW the lineitem ⋈ orders join: the selection
-    joins orders first (broadcast when its size estimate allows), and
-    the filtered orders — O(1) in SF for a fixed cohort (~10 orders
-    per customer) — joins the lineitem scan. Catalyst can't reorder
-    `(lineitem ⋈ orders) ⋈ sel` this way without CBO stats, so every
-    study-selection operator was paying a full fact-fact shuffle
-    before its cohort filter (the r9 PCoA-feed lesson, generalized —
-    at 100 TB this is the difference between shuffling the whole fact
-    and two broadcast joins with the selection at the scan).
+    """Abundance fact restricted to a sample selection: the published
+    :func:`sample_otu` fact joined with ``sel`` (broadcast when its
+    size estimate allows), one scan and one join.
+
+    When the store is unwritable the selection is pushed BELOW the
+    lineitem ⋈ orders join instead: the selection joins orders first,
+    and the filtered orders — O(1) in SF for a fixed cohort (~10
+    orders per customer) — joins the lineitem scan. Catalyst can't
+    reorder `(lineitem ⋈ orders) ⋈ sel` this way without CBO stats, so
+    every study-selection operator was paying a full fact-fact
+    shuffle before its cohort filter (the r9 PCoA-feed lesson,
+    generalized).
 
     ``sel`` must carry ``sample_id``; its other columns (block, grp,
     …) ride along, exactly as the old `abundance().join(sel)` shape
     produced. Result: sel's columns + (otu_id, cnt, order_id).
     """
+    fact = sample_otu(spark, sf_dir)
+    if fact is not None:
+        return maybe_broadcast(sel).join(fact, "sample_id").select(
+            *sel.columns, "otu_id", "cnt", "order_id"
+        )
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_custkey").alias("sample_id")
     )
@@ -98,15 +135,9 @@ def abundance_selected(
         F.col("l_partkey").alias("otu_id"),
         F.col("l_quantity").alias("cnt"),
     )
-    return (
-        li.join(maybe_broadcast(od_f), li.l_orderkey == od_f.o_orderkey)
-        .select(
-            *sel.columns,
-            "otu_id",
-            "cnt",
-            F.col("l_orderkey").alias("order_id"),
-        )
-    )
+    return li.join(
+        maybe_broadcast(od_f), li.l_orderkey == od_f.o_orderkey
+    ).select(*sel.columns, "otu_id", "cnt", F.col("l_orderkey").alias("order_id"))
 
 
 def _build_sample_context(spark: SparkSession, sf_dir: str) -> DataFrame:

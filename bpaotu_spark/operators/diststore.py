@@ -20,6 +20,10 @@ Artifacts (all exact-integer frames, deterministic functions of the
 data — the DuckDB oracles of every consumer keep computing from
 scratch, so the driver verifies the store-served values each round):
 
+* ``sample_otu``       — (sample_id, otu_id, cnt, order_id): the
+  SampleOTU fact every study selection scans
+  (:func:`bpaotu_spark.operators.bpaotu.sample_otu`, keyed on lineitem
+  and orders).
 * ``anosim_sel``       — (sample_id, grp): the study selection, one
   row per selected sample (keyed on ``customer`` alone); the
   permutation tests read it into the driver.
@@ -54,7 +58,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from bpaotu_spark.catalog import load_table
-from bpaotu_spark.operators.bpaotu import ABUNDANCE_CTE, abundance_selected
+from bpaotu_spark.operators.bpaotu import (
+    ABUNDANCE_CTE,
+    abundance,
+    abundance_selected,
+    sample_otu,
+)
 from bpaotu_spark.operators.ecology import _ANOSIM_SEL
 from bpaotu_spark.registry import register
 
@@ -270,7 +279,11 @@ def build_dist_store(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     artifact for ``sf_dir`` in one call (the comparison-page submit
     step). Returns ``{artifact: n_rows}``; idempotent — a second call
     reads every artifact from the store."""
+    fact = sample_otu(spark, sf_dir)
     return {
+        "sample_otu": (
+            abundance(spark, sf_dir) if fact is None else fact
+        ).count(),
         "anosim_sel": anosim_sel_cached(spark, sf_dir).count(),
         "bray_a_anosim": anosim_abundance_cached(spark, sf_dir).count(),
         "bray_tot_anosim": anosim_tot_cached(spark, sf_dir).count(),

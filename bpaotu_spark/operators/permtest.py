@@ -157,7 +157,7 @@ def _stored_pairs(spark: SparkSession, sf_dir: str) -> walk.Stored:
     re-label and re-aggregate the stored pairs, the textbook
     permutation-on-distance-matrix shape (Anderson 2001)."""
     return walk.stored(
-        anosim_pairs_cached(spark, sf_dir),
+        lambda: anosim_pairs_cached(spark, sf_dir),
         sf_dir,
         "bray_pairs_anosim",
         ("sample_a", "sample_b", "d_ppm"),
@@ -297,8 +297,9 @@ def _pair_sums(
     column, named in ``pairs.cols``) whose two samples both hold a
     mask, for each slot that saw a row. One kernel reduces the pairs
     batch by batch: in the driver over the published files, or, as
-    the fallback, in one ``mapInArrow`` pass over ``pairs.df`` and one
-    collect of at most (tasks × slots) rows. ``value`` maps the
+    the fallback, in one ``mapInArrow`` pass over the frame
+    ``pairs.df()`` serves and one collect of at most (tasks × slots)
+    rows. ``value`` maps the
     batch's value column to the int64 summand (default: the column
     itself)."""
     import numpy as np
@@ -397,7 +398,7 @@ def _collect_sel(spark: SparkSession, sf_dir: str) -> list[tuple[int, str]]:
     of the served frame."""
     cols = ("sample_id", "grp")
     src = walk.stored(
-        anosim_sel_cached(spark, sf_dir), sf_dir, "anosim_sel", cols,
+        lambda: anosim_sel_cached(spark, sf_dir), sf_dir, "anosim_sel", cols,
         table="customer",
     )
 

@@ -761,74 +761,6 @@ def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# token_vocab_coverage — per-document OOV rate against the corpus
-# top-N vocabulary.
-#
-# The tokenizer-fit diagnostic: after choosing a vocabulary (here the
-# exact top-_TOP_TOKENS corpus tokens — the same cut zipf_token_stats
-# ranks), score every document by how much of it the vocabulary
-# covers. High-OOV documents are the ones a fixed tokenizer would
-# shred into bytes; pipelines route them to re-tokenization or drop.
-#
-# Scale shape: token-frequency agg has full map-side combine; the
-# vocabulary is a LIMIT-N table (TakeOrderedAndProject, no global
-# sort) and joins back BROADCAST, so the per-token membership probe
-# is map-side; the only corpus-sized shuffle is the final per-doc
-# aggregation, which is pre-combined per partition.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "token_vocab_coverage",
-    oracle=f"""
-WITH t AS (
-  SELECT doc_id, {TOKENIZE_SQL} AS toks FROM documents
-), x AS (
-  SELECT doc_id, unnest(toks) AS token FROM t
-), tf AS (
-  SELECT token, count(*) AS tf FROM x GROUP BY token
-), vocab AS (
-  SELECT token FROM tf ORDER BY tf DESC, token ASC LIMIT {_TOP_TOKENS}
-)
-SELECT x.doc_id,
-  count(*) AS n_tokens,
-  count(*) FILTER (WHERE v.token IS NULL) AS n_oov,
-  count(*) FILTER (WHERE v.token IS NULL) * 1000000 // count(*) AS oov_ppm
-FROM x LEFT JOIN vocab v ON x.token = v.token
-GROUP BY x.doc_id
-""",
-)
-def token_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Counts, not sums, everywhere (DuckDB count(*) is BIGINT while
-    sum() would be HUGEINT — the round-3 driver-hash lesson); the ppm
-    quotient is integer DIV of two BIGINTs in both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    x = docs.select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
-    )
-    vocab = (
-        x.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .orderBy(F.col("tf").desc(), F.col("token").asc())
-        .limit(_TOP_TOKENS)
-        .select("token", F.lit(1).alias("in_vocab"))
-    )
-    return (
-        x.join(F.broadcast(vocab), "token", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.count(F.when(F.col("in_vocab").isNull(), F.lit(1))).alias(
-                "n_oov"
-            ),
-        )
-        .withColumn(
-            "oov_ppm", F.expr("CAST(n_oov * 1000000 DIV n_tokens AS BIGINT)")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # lang_length_quartiles — exact per-language document-length quartiles
 # (type-1 discrete: the value at rank ceil(q·n), no interpolation).
 # The corpus QC cut used to set per-language min/max length gates.
@@ -1194,8 +1126,8 @@ def source_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the corpus by doc_id parity (even = train, odd = held-out), build the
 # FULL train vocabulary per language, and measure the held-out OOV
 # occurrence rate (token occurrences never seen in training) plus the
-# unseen-TYPE share. Distinct from token_vocab_coverage (whole-corpus
-# top-K truncation cost): this is the generalization gap a tokenizer /
+# unseen-TYPE share. Not a whole-corpus top-K truncation cost: this
+# is the generalization gap a tokenizer /
 # LM eval actually cares about — training coverage of FUTURE text, the
 # number that decides whether a vocab is big enough before a training
 # run is committed.

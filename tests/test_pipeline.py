@@ -206,15 +206,6 @@ def test_doc_chunk_sliding_is_map_only(spark, sf_dir):
     assert "Exchange" not in plan  # narrow: no shuffle anywhere
 
 
-def test_token_vocab_coverage_bounds(spark, sf_dir, tables):
-    rows = QUERIES["token_vocab_coverage"](spark, sf_dir).collect()
-    assert len(rows) == tables["documents"].count()
-    for r in rows:
-        assert 0 <= r.n_oov <= r.n_tokens
-        assert 0 <= r.oov_ppm <= 1_000_000
-        assert r.oov_ppm == r.n_oov * 1_000_000 // r.n_tokens
-
-
 def test_bigram_pmi_rank_and_support(spark, sf_dir):
     from bpaotu_spark.functions.textops import _PMI_MIN_COUNT, _PMI_TOPK
 

@@ -117,6 +117,7 @@ def test_build_dist_store_manifest_idempotent(
     index_store._MEM.clear()
     m1 = build_dist_store(spark, sf_dir)
     assert set(m1) == {
+        "sample_otu",
         "anosim_sel",
         "bray_a_anosim",
         "bray_tot_anosim",

@@ -49,14 +49,16 @@ def test_beam_walk_hop_budget_is_a_fixed_point(spark, sf_dir):
     from bpaotu_spark.ann.walk import Stored, beam_walk, collect_qv, entry_init
 
     eq = _eq(spark, sf_dir)
-    knn = Stored(connected_edges_cached(spark, sf_dir), ("vec_id", "neighbor_id"))
+    knn = Stored(
+        lambda: connected_edges_cached(spark, sf_dir), ("vec_id", "neighbor_id")
+    )
     qs = eq.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )
-    cq = eq.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
-    cq = Stored(cq, ("cand_id", "cq"))
-    qmap = collect_qv(Stored(qs, ("query_id", "qv")), range(10))
-    eid, ed2 = entry_init(Stored(eq, ("vec_id", "q")), qmap)
+    cands = eq.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
+    cq = Stored(lambda: cands, ("cand_id", "cq"))
+    qmap = collect_qv(Stored(lambda: qs, ("query_id", "qv")), range(10))
+    eid, ed2 = entry_init(Stored(lambda: eq, ("vec_id", "q")), qmap)
     init = {q: [(ed2[q], eid)] for q in qmap}
     f8 = beam_walk(spark, knn, cq, qmap, init, beam=12, hops=8)
     f28 = beam_walk(spark, knn, cq, qmap, init, beam=12, hops=28)
@@ -71,15 +73,15 @@ def test_walks_identical_with_chunked_in_lists(spark, sf_dir, monkeypatch):
 
     eq = _eq(spark, sf_dir)
     knn = walk.Stored(
-        connected_edges_cached(spark, sf_dir), ("vec_id", "neighbor_id")
+        lambda: connected_edges_cached(spark, sf_dir), ("vec_id", "neighbor_id")
     )
     qs = eq.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )
-    cq = eq.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
-    cq = walk.Stored(cq, ("cand_id", "cq"))
-    qmap = walk.collect_qv(walk.Stored(qs, ("query_id", "qv")), range(4))
-    eid, ed2 = walk.entry_init(walk.Stored(eq, ("vec_id", "q")), qmap)
+    cands = eq.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
+    cq = walk.Stored(lambda: cands, ("cand_id", "cq"))
+    qmap = walk.collect_qv(walk.Stored(lambda: qs, ("query_id", "qv")), range(4))
+    eid, ed2 = walk.entry_init(walk.Stored(lambda: eq, ("vec_id", "q")), qmap)
 
     def both():
         beam = walk.beam_walk(
@@ -114,11 +116,11 @@ def test_greedy_tie_keeps_current_node(spark):
     # node 5 (cur) and node 3 both sit at d2=1 from the query vector
     # [0, 0]; 3 < 5 would win a (d2, id) sort, but must not be taken.
     edges = Stored(
-        spark.createDataFrame([(5, 3), (3, 5)], "vec_id long, neighbor_id long"),
+        lambda: spark.createDataFrame([(5, 3), (3, 5)], "vec_id long, neighbor_id long"),
         ("vec_id", "neighbor_id"),
     )
     cq = Stored(
-        spark.createDataFrame(
+        lambda: spark.createDataFrame(
             [(3, [1, 0]), (5, [0, 1])], "cand_id long, cq array<bigint>"
         ),
         ("cand_id", "cq"),
@@ -136,7 +138,7 @@ def test_greedy_walk_strictly_improves_to_local_min(spark):
     from bpaotu_spark.ann.walk import Stored, greedy_walk
 
     edges = Stored(
-        spark.createDataFrame(
+        lambda: spark.createDataFrame(
             [(9, 4), (4, 9), (4, 2), (2, 4), (2, 1), (1, 2)],
             "vec_id long, neighbor_id long",
         ),
@@ -144,7 +146,7 @@ def test_greedy_walk_strictly_improves_to_local_min(spark):
     )
     vecs = {9: [9, 0], 4: [4, 0], 2: [2, 0], 1: [1, 0]}
     cq = Stored(
-        spark.createDataFrame(
+        lambda: spark.createDataFrame(
             [(k, v) for k, v in vecs.items()], "cand_id long, cq array<bigint>"
         ),
         ("cand_id", "cq"),

@@ -4,6 +4,7 @@ stats / events / olap / ann / audit / survival operators."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Row
 
 from bpaotu_spark.registry import QUERIES, load_all
@@ -534,26 +535,118 @@ def test_brand_penetration_shares(spark, sf_dir):
         assert r.top_share_ppm >= 1_000_000 // r.n_nations - 1
 
 
-def test_abundance_selected_equals_filter_after_join(spark, sf_dir):
-    """The pushdown feed is row-identical to the naive
-    filter-after-join shape it replaced."""
-    from bpaotu_spark.catalog import load_table, maybe_broadcast
-    from bpaotu_spark.operators.bpaotu import abundance, abundance_selected
+def _furniture_sel(spark, sf_dir, segment: str = "FURNITURE"):
+    from bpaotu_spark.catalog import load_table
 
-    sel = (
+    return (
         load_table(spark, sf_dir, "customer")
-        .filter("c_mktsegment = 'FURNITURE'")
+        .filter(F.col("c_mktsegment") == segment)
         .select(
             F.col("c_custkey").alias("sample_id"),
             F.col("c_nationkey").alias("block"),
         )
     )
-    new = abundance_selected(spark, sf_dir, sel)
-    old = abundance(spark, sf_dir).join(maybe_broadcast(sel), "sample_id")
+
+
+def test_abundance_selected_equals_filter_after_join(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The selection feed is row-identical, with the same schema, to
+    the naive filter-after-join shape in every store state: cold (the
+    first call builds and publishes ``sample_otu``), warm (the fact is
+    scanned by path, nothing is built) and an unwritable root (the
+    two-join form, with the publish failure counted)."""
+    from bpaotu_spark.ann import index_store
+    from bpaotu_spark.catalog import maybe_broadcast
+    from bpaotu_spark.operators import bpaotu
+    from bpaotu_spark.operators.bpaotu import abundance, abundance_selected
+
+    sel = _furniture_sel(spark, sf_dir)
     key = ["sample_id", "block", "otu_id", "cnt", "order_id"]
-    assert sorted(map(tuple, new.select(*key).collect())) == sorted(
-        map(tuple, old.select(*key).collect())
+    old = abundance(spark, sf_dir).join(maybe_broadcast(sel), "sample_id")
+    want = sorted(map(tuple, old.select(*key).collect()))
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a file where the store root's parent should be")
+
+    def no_build(*a, **k):
+        raise AssertionError("a warm store must not rebuild sample_otu")
+
+    for state, root in (
+        ("cold", tmp_path / "idx"),
+        ("warm", tmp_path / "idx"),
+        ("unwritable", blocker / "idx"),
+    ):
+        monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(root))
+        with pytest.MonkeyPatch.context() as mp:
+            if state == "warm":
+                mp.setattr(bpaotu, "abundance", no_build)
+            failed = index_store.FAILURES["publish"]
+            new = abundance_selected(spark, sf_dir, sel)
+        assert new.columns == key, state
+        assert new.schema == old.select(*key).schema, state
+        assert sorted(map(tuple, new.collect())) == want, state
+        path = index_store.artifact_dir(sf_dir, "sample_otu", bpaotu.SAMPLE_OTU_TABLES)
+        assert (path is None) == (state == "unwritable"), state
+        assert index_store.FAILURES["publish"] - failed == (state == "unwritable")
+
+
+def test_sample_otu_key_follows_lineitem_part_files(spark, tmp_path, monkeypatch):
+    """Rewriting a lineitem part file in place changes the key of
+    ``sample_otu``: the selection then reads the new rows, never the
+    artifact built from the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bpaotu_spark.ann import index_store
+    from bpaotu_spark.operators.bpaotu import SAMPLE_OTU_TABLES, abundance_selected
+    from bpaotu_spark.session import local_frame
+
+    monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(tmp_path / "idx"))
+    data = tmp_path / "data"
+    (data / "lineitem.parquet").mkdir(parents=True)
+    part = data / "lineitem.parquet" / "part-0.parquet"
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([1, 2], pa.int64()),
+                  "o_custkey": pa.array([10, 20], pa.int64())}),
+        data / "orders.parquet",
     )
+
+    def write_lineitem(partkeys):
+        pq.write_table(
+            pa.table({
+                "l_orderkey": pa.array([1] * len(partkeys), pa.int64()),
+                "l_partkey": pa.array(partkeys, pa.int64()),
+                "l_quantity": pa.array([1.0] * len(partkeys), pa.float64()),
+            }),
+            part,
+        )
+
+    sel = local_frame(spark, [(10,)], "sample_id long")
+
+    def otus():
+        rows = abundance_selected(spark, str(data), sel).collect()
+        return sorted(r.otu_id for r in rows)
+
+    write_lineitem([5, 6])
+    key = index_store._key(str(data), "sample_otu", SAMPLE_OTU_TABLES)
+    assert otus() == [5, 6]
+    assert index_store.artifact_dir(str(data), "sample_otu", SAMPLE_OTU_TABLES)
+    write_lineitem([7, 8, 9])
+    assert index_store._key(str(data), "sample_otu", SAMPLE_OTU_TABLES) != key
+    assert otus() == [7, 8, 9]
+
+
+def test_abundance_selected_empty_selection(spark, sf_dir):
+    """An empty selection gives an empty frame with the schema of a
+    non-empty one."""
+    from bpaotu_spark.operators.bpaotu import abundance_selected
+
+    full = abundance_selected(spark, sf_dir, _furniture_sel(spark, sf_dir))
+    empty = abundance_selected(
+        spark, sf_dir, _furniture_sel(spark, sf_dir, "NO SUCH SEGMENT")
+    )
+    assert empty.collect() == []
+    assert empty.schema == full.schema
 
 
 def test_greedy_graph_search_sane(spark, sf_dir):

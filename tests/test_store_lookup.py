@@ -6,7 +6,9 @@ permutation tests.
   an input has no local path or its files are gone, and both paths
   must give the same rows;
 * ``ann/index_store.py`` keys an artifact on the file stamp of every
-  file under its source table, and caps the process tier;
+  file under its source table, caps the process tier and counts each
+  failed publish; on a warm store an Arrow reader's first build takes
+  no frame at all (its ``Stored`` thunk never runs);
 * ``operators/permtest.py`` reads the study selection and reduces the
   stored pairs in one kernel whose int64 sums are bounded: in the
   driver over the published files, or as a ``mapInArrow`` pass when
@@ -127,20 +129,44 @@ def _files_gone(real, tmp_path):
     return resolve
 
 
+def _count_frames(monkeypatch) -> dict:
+    """Counts ``cached_frame`` calls: a :class:`walk.Stored` thunk
+    serves its frame through one."""
+    from bpaotu_spark.ann import index_store
+
+    n = {"frames": 0}
+    real = index_store.cached_frame
+
+    def counting(*a, **k):
+        n["frames"] += 1
+        return real(*a, **k)
+
+    monkeypatch.setattr(index_store, "cached_frame", counting)
+    return n
+
+
 @pytest.mark.parametrize("mode", ["no_path", "files_gone"])
 @pytest.mark.parametrize("key", WALK_KEYS)
 def test_spark_fallback_gives_arrow_rows(
     spark, sf_dir, arrow_rows, tmp_path, monkeypatch, mode, key
 ):
-    from bpaotu_spark.ann import index_store
+    """Without local files each input's thunk serves a Spark frame,
+    whose fetches give the Arrow path's rows; a removed directory
+    counts as a fallback."""
+    from bpaotu_spark.ann import index_store, walk
 
     real = index_store.artifact_dir
     fake = _no_path(real) if mode == "no_path" else _files_gone(real, tmp_path)
     monkeypatch.setattr(index_store, "artifact_dir", fake)
     n = _count_spark_fetches(monkeypatch)
+    frames = _count_frames(monkeypatch)
+    before = walk.FALLBACKS.copy()
     got = [tuple(r) for r in QUERIES[key](spark, sf_dir).collect()]
     assert n["fetch"] > 0
+    assert frames["frames"] > 0
     assert got == arrow_rows[key]
+    counted = walk.FALLBACKS - before
+    assert bool(counted) == (mode == "files_gone"), counted
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -224,10 +250,12 @@ def test_permutation_spark_fallback_gives_arrow_rows(
     fake = _no_path(real) if mode == "no_path" else _files_gone(real, tmp_path)
     monkeypatch.setattr(index_store, "artifact_dir", fake)
     before = walk.FALLBACKS.copy()
+    frames = _count_frames(monkeypatch)
     sdf, jobs = _jobs_in_group(
         spark, f"test_store_lookup/{mode}/{key}", lambda: QUERIES[key](spark, sf_dir)
     )
     assert len(jobs) > 0
+    assert frames["frames"] > 0
     assert [tuple(r) for r in sdf.collect()] == perm_rows[key]
     counted = walk.FALLBACKS - before
     if mode == "files_gone":
@@ -235,6 +263,53 @@ def test_permutation_spark_fallback_gives_arrow_rows(
         assert counted["bray_pairs_anosim"] >= 1
     else:
         assert not counted
+
+
+FIRST_BUILD_KEYS = (*PERM_KEYS, "ann_beam_topk_quality")
+
+
+@pytest.mark.parametrize("key", FIRST_BUILD_KEYS)
+def test_first_build_on_warm_store_takes_no_frame(spark, sf_dir, monkeypatch, key):
+    """A stand-in fresh process — a warm local store and an empty
+    process tier: the first build reads every input by its directory.
+    It runs no Spark job and never calls ``cached_frame``."""
+    from bpaotu_spark.ann import index_store
+
+    load_all()
+    want = [tuple(r) for r in QUERIES[key](spark, sf_dir).collect()]  # warms the store
+    index_store._MEM.clear()
+
+    def no_frame(*a, **k):
+        raise AssertionError("an Arrow reader took a cached_frame")
+
+    monkeypatch.setattr(index_store, "cached_frame", no_frame)
+    sdf, jobs = _jobs_in_group(
+        spark, f"test_store_lookup/first/{key}", lambda: QUERIES[key](spark, sf_dir)
+    )
+    assert jobs == []
+    assert [tuple(r) for r in sdf.collect()] == want
+
+
+def test_unwritable_store_counts_publish_failure(spark, sf_dir, tmp_path, monkeypatch):
+    """An unwritable store root publishes nothing: ``publish`` returns
+    None, ``cached_frame`` serves the builder's rows, and each failed
+    publish counts in ``FAILURES``."""
+    from bpaotu_spark.ann import index_store
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a file where the store root's parent should be")
+    monkeypatch.setenv("BPAOTU_ANN_INDEX_DIR", str(blocker / "idx"))
+    before = index_store.FAILURES.copy()
+    assert index_store.publish(
+        spark, sf_dir, "unwritable_probe", lambda: spark.range(3).toDF("id")
+    ) is None
+    df = index_store.cached_frame(
+        spark, sf_dir, "unwritable_probe", lambda: spark.range(3).toDF("id")
+    )
+    assert sorted(r[0] for r in df.collect()) == [0, 1, 2]
+    assert index_store.artifact_dir(sf_dir, "unwritable_probe") is None
+    assert index_store.FAILURES - before == {"publish": 2}
+    index_store._MEM.clear()
 
 
 def test_batch_scoring_equals_the_python_loop():
@@ -260,7 +335,7 @@ def test_entry_init_on_empty_frame_is_named_error(spark, sf_dir):
         with pytest.raises(walk.NoEntryPoint, match="vec_id"):
             walk.entry_init(src, {0: [0]}, none)
     with pytest.raises(ValueError):
-        walk.entry_init(walk.Stored(vecs.df.limit(0), vecs.cols), {0: [0]})
+        walk.entry_init(walk.Stored(lambda: vecs.df().limit(0), vecs.cols), {0: [0]})
 
 
 def test_survivor_predicate_agrees_across_paths(spark, sf_dir):
@@ -274,7 +349,7 @@ def test_survivor_predicate_agrees_across_paths(spark, sf_dir):
     vecs = walk.store_vectors(spark, sf_dir)
     surv = DEAD_VECS.where(member=False)
     arrow = ds.dataset(vecs.path).to_table(columns=["vec_id"], filter=surv.arrow)
-    spark_ids = {r[0] for r in vecs.df.filter(surv.spark).select("vec_id").collect()}
+    spark_ids = {r[0] for r in vecs.df().filter(surv.spark).select("vec_id").collect()}
     assert set(arrow.column("vec_id").to_pylist()) == spark_ids
     assert 7 not in spark_ids and 8 in spark_ids
 
@@ -300,7 +375,7 @@ def test_d_ppm_outside_bound_raises_named_error(spark):
     )
     with pytest.raises(Exception, match="PairSumBound"):
         permtest._pair_sums(
-            walk.Stored(pairs, tuple(pairs.columns)), {1: 0, 2: 1},
+            walk.Stored(lambda: pairs, tuple(pairs.columns)), {1: 0, 2: 1},
             permtest._permanova_slots, permtest._d_ppm_squared,
         )
 
@@ -321,7 +396,7 @@ def test_arrow_path_raises_pair_sum_bound(spark, tmp_path):
         path / "part-0.parquet",
     )
     pairs = local_frame(spark, [(1, 2, 2 * 10**6)], "sample_a long, sample_b long, d_ppm long")
-    src = walk.Stored(pairs, cols, str(path))
+    src = walk.Stored(lambda: pairs, cols, str(path))
     with pytest.raises(permtest.PairSumBound, match="d_ppm"):
         permtest._pair_sums(
             src, {1: 0, 2: 1}, permtest._permanova_slots, permtest._d_ppm_squared
@@ -344,7 +419,8 @@ def test_kernel_sums_match_python(spark):
         spark, rows, "sample_a long, sample_b long, d_ppm long"
     )
     got = permtest._pair_sums(
-        walk.Stored(pairs, tuple(pairs.columns)), masks, permtest._permanova_slots,
+        walk.Stored(lambda: pairs, tuple(pairs.columns)), masks,
+        permtest._permanova_slots,
         permtest._d_ppm_squared,
     )
     want: dict[int, tuple[int, int]] = {}
