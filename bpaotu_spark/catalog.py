@@ -10,6 +10,22 @@ At 100 TB the same function signature points at a partitioned parquet
 lake (or an external catalog); nothing downstream changes because every
 operator takes DataFrames, not paths.
 
+Three helpers derive a plan choice from the input layout at hand
+rather than from a scale constant, so one call site is right at
+sf0.001 and on a lake. :func:`maybe_broadcast` hints a join side only
+while Catalyst's size estimate stays under the broadcast threshold
+(bounded dimensions and selections). :func:`widen_scan` repartitions
+a scan up to the core count only when it has fewer splits than cores,
+ahead of heavy per-row work such as n-gram or signature expansion.
+:func:`maybe_single_partition` plans a scan of one local file no
+larger than AQE's ``minPartitionSize`` as one partition, so the joins
+and aggregates of a page above it run with no exchange; it is applied
+at the page readers (selection abundance, the map grid, the taxonomy
+drill-down) and not in :func:`load_table`, because it checks only the
+size of the input file: readers that expand rows before an exchange
+need that exchange's parallelism.
+Failures these helpers absorb count in :data:`FAILURES` by site.
+
 Schema memo: inferring a parquet schema runs a Spark job (~0.1 s a
 table), so ``load_table`` infers each table's schema once and later
 calls read with ``.schema(...)``: a warm call runs no job. Every call
@@ -32,7 +48,8 @@ from __future__ import annotations
 import os
 import stat
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +78,39 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Failures the layout helpers absorb (each caller still gets a correct
+# frame), by site: "conf" (a byte-valued conf did not parse),
+# "broadcast_estimate" (no Catalyst size estimate) and
+# "single_partition" (no plan or file to inspect). The sites are fixed
+# names, which bounds the counter.
+FAILURES: Counter[str] = Counter()
+_FAILURES_LOCK = threading.Lock()
+
+
+def _failed(site: str) -> None:
+    with _FAILURES_LOCK:
+        FAILURES[site] += 1
+
+
+def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """The byte-valued session conf ``key`` in bytes; ``default`` (and
+    a count in :data:`FAILURES`) when it cannot be read."""
+    try:
+        raw = spark.conf.get(key)
+        try:
+            # plain integer form first: "-1" (the documented disable
+            # value) is not a valid byte string for JavaUtils
+            return int(raw)
+        except ValueError:
+            return int(
+                spark._jvm.org.apache.spark.network.util.JavaUtils
+                .byteStringAsBytes(raw)
+            )
+    except Exception:
+        _failed("conf")
+        return default
+
+
 def maybe_broadcast(df: DataFrame, bound: str = "") -> DataFrame:
     """Size-guarded broadcast hint (r7 VERDICT item 4).
 
@@ -78,20 +128,9 @@ def maybe_broadcast(df: DataFrame, bound: str = "") -> DataFrame:
     bpaotu mapping (e.g. "SampleContext ~1e5 rows") — it is part of
     the call-site contract, not used at runtime.
     """
-    spark = df.sparkSession
-    try:
-        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            # plain integer form first: "-1" (the documented disable
-            # value) is not a valid byte string for JavaUtils
-            thresh = int(raw)
-        except ValueError:
-            thresh = int(
-                spark._jvm.org.apache.spark.network.util.JavaUtils
-                .byteStringAsBytes(raw)
-            )
-    except Exception:
-        thresh = 10 * 1024 * 1024
+    thresh = _conf_bytes(
+        df.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
+    )
     if thresh <= 0:
         # auto-broadcast disabled by config: never force past the
         # user's explicit choice
@@ -108,6 +147,7 @@ def maybe_broadcast(df: DataFrame, bound: str = "") -> DataFrame:
         # and let AQE pick broadcast at runtime if it is small.
         import warnings
 
+        _failed("broadcast_estimate")
         warnings.warn(
             "maybe_broadcast: Catalyst size estimate unavailable; "
             "leaving join unhinted (AQE decides)",
@@ -118,6 +158,53 @@ def maybe_broadcast(df: DataFrame, bound: str = "") -> DataFrame:
     if est <= thresh:
         return F.broadcast(df)
     return df
+
+
+def maybe_single_partition(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` when ``df`` reads one small local file, else
+    ``df`` unchanged.
+
+    The rule fires only when the optimized plan has exactly one leaf,
+    that leaf's ``inputFiles()`` is a single local data file, and the
+    file is at most ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+    bytes (1 MB by default). Such a file is one scan split anyway
+    (``maxSplitBytes`` is at least ``openCostInBytes``, 4 MB), so the
+    scan loses no parallelism. ``Coalesce(1)`` reports
+    ``SinglePartition``, which satisfies every clustered distribution,
+    so the joins and aggregates above it plan no exchange: the page
+    runs as one task per stage with no shuffle stage between them. Any
+    other input (several files, several leaves, a remote path, a larger
+    file) keeps its exchanges.
+
+    The gate checks the input file alone, not what the plan above it
+    produces. A consumer that joins the frame with itself multiplies
+    rows above the scan, which would then run in one task, and reads
+    the frame from several branches, each of which would redo the scan
+    with no exchange left to reuse. Such a consumer keeps the scan's
+    exchanges (``self_join=True`` in
+    :func:`bpaotu_spark.operators.bpaotu.abundance_selected`)."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.collectLeaves().size() != 1:
+            return df
+        files = df.inputFiles()
+        if len(files) != 1:
+            return df
+        url = urlparse(files[0])
+        if url.scheme not in ("", "file"):
+            return df
+        size = os.stat(unquote(url.path)).st_size
+    except Exception:
+        # no plan to inspect (Spark Connect) or the file vanished:
+        # leave the frame as it is
+        _failed("single_partition")
+        return df
+    limit = _conf_bytes(
+        df.sparkSession,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        1 << 20,
+    )
+    return df.coalesce(1) if size <= limit else df
 
 
 def widen_scan(df: DataFrame, *keys: str) -> DataFrame:

@@ -25,6 +25,16 @@ Scale notes (the part that has to survive 1000 executors):
   facts would be bucketed by orderkey so it is shuffle-free. It runs
   once per data stamp, to publish ``sample_otu``; a sample selection
   then joins the published fact alone.
+- A page whose input is one small file runs in one partition: the
+  published ``sample_otu`` scan in :func:`abundance_selected` and the
+  ``orders`` scan in ``map_binning_2d`` go through
+  :func:`bpaotu_spark.catalog.maybe_single_partition`, so while the
+  file is a single local file under AQE's ``minPartitionSize`` (1 MB;
+  sf0.001 and sf0.01 here) the joins and aggregates above the scan
+  plan no exchange. Past that size (``orders`` is 2.7 MB at sf0.1) or
+  once the fact spans several files, the scan keeps its exchanges and
+  its parallelism. The pair formers, whose self-join outgrows the
+  input file, keep them at every size (``self_join=True``).
 - All *dimension* joins (customer/nation/region/part) are explicit
   ``F.broadcast``: they stay bounded while the fact grows.
 - Pairwise operators (Bray-Curtis) are **blocked**: pairs are only
@@ -45,7 +55,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bpaotu_spark.catalog import _memo_schema, load_table, maybe_broadcast
+from bpaotu_spark.catalog import (
+    _memo_schema,
+    load_table,
+    maybe_broadcast,
+    maybe_single_partition,
+)
 from bpaotu_spark.plans.filters import ContextualFilter, Pred
 from bpaotu_spark.plans.taxonomy import RankFix, TaxonomyFilter, drilldown_options
 from bpaotu_spark.registry import ORACLES, register
@@ -102,7 +117,7 @@ def sample_otu(spark: SparkSession, sf_dir: str) -> DataFrame | None:
 
 
 def abundance_selected(
-    spark: SparkSession, sf_dir: str, sel: DataFrame
+    spark: SparkSession, sf_dir: str, sel: DataFrame, *, self_join: bool = False
 ) -> DataFrame:
     """Abundance fact restricted to a sample selection: the published
     :func:`sample_otu` fact joined with ``sel`` (broadcast when its
@@ -120,9 +135,21 @@ def abundance_selected(
     ``sel`` must carry ``sample_id``; its other columns (block, grp,
     …) ride along, exactly as the old `abundance().join(sel)` shape
     produced. Result: sel's columns + (otu_id, cnt, order_id).
+
+    The fact scan goes through
+    :func:`bpaotu_spark.catalog.maybe_single_partition`, so a page
+    that aggregates the selection over a one-file fact runs with no
+    exchange. A caller that joins the result with itself (the blocked
+    pair formers) passes ``self_join=True`` and keeps the scan's
+    exchanges: the self-join's output outgrows the one input file the
+    rule checks, and its branches share the scan, selection join and
+    aggregate only through exchange reuse. Under ``Coalesce(1)`` each
+    branch would redo them.
     """
     fact = sample_otu(spark, sf_dir)
     if fact is not None:
+        if not self_join:
+            fact = maybe_single_partition(fact)
         return maybe_broadcast(sel).join(fact, "sample_id").select(
             *sel.columns, "otu_id", "cnt", "order_id"
         )
@@ -702,7 +729,7 @@ GROUP BY 1, 2
 """,
 )
 def map_binning_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
+    orders = maybe_single_partition(load_table(spark, sf_dir, "orders"))
     cust = load_table(spark, sf_dir, "customer")
     j = orders.join(maybe_broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
     return (
@@ -1305,7 +1332,7 @@ def beta_diversity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("sample_id"), F.col("c_nationkey").alias("block")
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .select("sample_id", "block", "otu_id")
         .distinct()
     )

@@ -101,7 +101,7 @@ def mantel_test_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .groupBy("sample_id", "block", "otu_id")
         .agg(F.sum("cnt").cast("bigint").alias("c"))
     )
@@ -1070,7 +1070,7 @@ def beta_diversity_morisita_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("block"),
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .groupBy("sample_id", "block", "otu_id")
         .agg(F.sum(F.col("cnt").cast("bigint")).alias("c"))
     )

@@ -108,7 +108,7 @@ def beta_diversity_sorensen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("block"),
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .select("sample_id", "block", "otu_id")
         .distinct()
     )

@@ -84,7 +84,7 @@ def beta_diversity_kulczynski(
         F.col("c_nationkey").alias("block"),
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .groupBy("sample_id", "block", "otu_id")
         .agg(F.sum("cnt").cast("bigint").alias("c"))
     )
@@ -352,7 +352,7 @@ def beta_diversity_ochiai(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("block"),
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .select("sample_id", "block", "otu_id")
         .distinct()
     )

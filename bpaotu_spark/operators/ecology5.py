@@ -96,7 +96,7 @@ def beta_baselga_partition(
         F.col("c_nationkey").alias("block"),
     )
     a = (
-        abundance_selected(spark, sf_dir, sel)
+        abundance_selected(spark, sf_dir, sel, self_join=True)
         .select("sample_id", "block", "otu_id")
         .distinct()
     )

@@ -19,6 +19,7 @@ from typing import Literal
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from bpaotu_spark.catalog import maybe_single_partition
 from bpaotu_spark.plans.filters import _sql_lit
 
 
@@ -61,10 +62,18 @@ class TaxonomyFilter:
 
 
 def drilldown_options(taxa: DataFrame, tf: TaxonomyFilter) -> DataFrame:
-    """Value options at the next rank + how many taxa each covers."""
+    """Value options at the next rank + how many taxa each covers.
+
+    The taxonomy table is small next to the abundance fact: when
+    ``taxa`` is a scan of one local file under AQE's
+    ``minPartitionSize`` (``part`` up to sf0.1), it is planned as one
+    partition (:func:`bpaotu_spark.catalog.maybe_single_partition`)
+    and the options aggregate runs in the scan's task with no
+    exchange. A larger or multi-file taxonomy keeps the exchange."""
     nxt = tf.next_rank()
     return (
-        taxa.filter(tf.column())
+        maybe_single_partition(taxa)
+        .filter(tf.column())
         .groupBy(F.col(nxt).alias("option"))
         .agg(F.count(F.lit(1)).alias("n_taxa"))
     )
